@@ -1,11 +1,26 @@
 """Multimodal column plumbing: opaque ``binary`` payloads + typed metadata.
 
 Images/audio/video travel as ``binary`` columns with a metadata struct;
-decode / feature-extraction / resize / frame-sampling run as Arrow-batched
-``mapInPandas`` stages.  SIX codecs are fully real and dependency-free —
-WAV (PCM16), 24-bit BMP, binary PGM, PNG (zlib inflate + per-scanline
-unfilter), baseline JPEG (Huffman entropy decode + dequantize + IDCT
-+ YCbCr), and Y4M video (YUV4MPEG2 stream parsing + real frame
+decode / feature-extraction / resize / frame-sampling / fixture synthesis
+run in Python workers, and every one of those stages goes through ONE
+row-mapper, :func:`_map_rows`.  Adding a stage means writing a per-row
+function and declaring its output schema: the row-mapper owns the Arrow
+batch loop, builds each output column from the schema's field type
+(LONG -> nullable ``Int64``, BOOLEAN -> nullable ``boolean``, so NULL
+rows and 63-bit hashes survive the Arrow conversion), makes the single
+``mapInPandas`` call, and holds the quarantine rule: a row whose
+function raises ``ValueError``/``struct.error`` fails the job, or under
+``null_on_error=True`` becomes a NULL row keyed by the input's media id
+(the ingest sink's quarantine split).  Fixture synthesizers use the thin
+:func:`_synth` on top of it: a function from an id to
+``(payload, format)``.
+
+EIGHT decoders are fully real and dependency-free — WAV (PCM 8/16/24-bit
+and float32, mono/stereo), 24-bit BMP, binary PGM, PNG (zlib inflate +
+per-scanline unfilter, Adam7), APNG (frame compositing with alpha
+blending), baseline + progressive JPEG (Huffman entropy decode +
+dequantize + IDCT + YCbCr), GIF (LZW, interlace, animated-frame
+compositing), and Y4M video (YUV4MPEG2 stream parsing + real frame
 sampling) — while formats that genuinely need external libraries
 (compressed video, exotic stills) keep an honest stub (clearly marked
 below); the Spark-side contract
@@ -57,6 +72,63 @@ DECODED_SCHEMA = StructType(
         StructField("features", ArrayType(FloatType())),
     ]
 )
+
+
+def _column(values, dtype):
+    """One output column for a schema field: LONG and BOOLEAN fields
+    become nullable ``Int64``/``boolean`` arrays, so a NULL never turns
+    a column into float64 (which would round 63-bit hashes and ids)."""
+    if isinstance(dtype, LongType):
+        return pd.array(values, dtype="Int64")
+    if isinstance(dtype, BooleanType):
+        return pd.array(values, dtype="boolean")
+    return list(values)
+
+
+def _map_rows(df, schema, fn, cols, null_on_error=False, null_tail=None):
+    """The one Python-worker stage of this module (``mapInPandas``).
+
+    ``fn(*row)`` runs over the ``cols`` values of each input row and
+    returns a LIST of output rows in ``schema`` order — one for most
+    stages, one per frame or window for the sequence stages.  The
+    quarantine rule lives here: when ``fn`` raises ``ValueError`` or
+    ``struct.error`` the job fails, or under ``null_on_error`` the input
+    row becomes ONE output row of its first ``cols`` value (the media id)
+    followed by ``null_tail`` (default: NULL in every other column)."""
+    tail = (None,) * (len(schema) - 1) if null_tail is None else null_tail
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for row in zip(*(pdf[c] for c in cols)):
+                try:
+                    out += fn(*row)
+                except (ValueError, struct.error):
+                    if not null_on_error:
+                        raise
+                    out.append((row[0],) + tail)
+            data = list(zip(*out)) if out else [()] * len(schema)
+            yield pd.DataFrame(
+                {f.name: _column(v, f.dataType) for f, v in zip(schema, data)}
+            )
+
+    return df.mapInPandas(run, schema=schema)
+
+
+#: MEDIA_SCHEMA ``kind`` of a synthesized format (every other one is an image)
+_FORMAT_KIND = {"wav": "audio", "y4m": "video"}
+
+
+def _synth(df: DataFrame, id_col: str, make) -> DataFrame:
+    """Fixture-synthesizer plumbing: ``make(k)`` returns ``(payload,
+    format)`` for integer id ``k``; one MEDIA_SCHEMA row per input id."""
+
+    def row(k):
+        k = int(k)
+        payload, fmt = make(k)
+        return [(k, _FORMAT_KIND.get(fmt, "image"), payload, fmt, len(payload))]
+
+    return _map_rows(df.select(F.col(id_col)), MEDIA_SCHEMA, row, [id_col])
 
 
 def attach_payload(df: DataFrame, id_col: str, text_col: str, kind: str = "image") -> DataFrame:
@@ -159,24 +231,12 @@ def decode_media(df: DataFrame, n_features: int = 8) -> DataFrame:
     ship, minus the library-gated formats.  Malformed payloads of a known
     format raise (codec ``ValueError``) — quarantine upstream."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = []
-            for fmt, p in zip(pdf["format"], pdf["payload"]):
-                d = _real_decode(fmt, bytes(p) if p is not None else b"", n_features)
-                decoded.append(d if d is not None else _stub_decode(p, n_features))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "n_frames": [d[2] for d in decoded],
-                    "features": [d[3] for d in decoded],
-                }
-            )
+    def one(mid, kind, fmt, p):
+        d = _real_decode(fmt, bytes(p) if p is not None else b"", n_features)
+        return [(mid, kind) + (d if d is not None else _stub_decode(p, n_features))]
 
-    return df.mapInPandas(run, schema=DECODED_SCHEMA)
+    cols = ["media_id", "kind", "format", "payload"]
+    return _map_rows(df, DECODED_SCHEMA, one, cols)
 
 
 RESIZED_SCHEMA = StructType(
@@ -262,37 +322,16 @@ def phash_media(df: DataFrame, null_on_error: bool = False) -> DataFrame:
     (unknown format / malformed payload) instead of failing the job —
     the ingest sink splits those into its quarantine; analytic queries
     keep the default raise so a bad payload can't silently vanish."""
-    def one(fmt: str, payload: bytes) -> int:
+    def one(mid, fmt: str, payload: bytes):
         decoded = _decode_pixels(fmt, bytes(payload))
         if decoded is None:
             raise ValueError(f"phash_media: no real codec for format {fmt!r}")
         w, h, px = decoded
-        return _phash_of_pixels(px, w, h)
+        return [(mid, _phash_of_pixels(px, w, h))]
 
-    def guarded(fmt: str, payload: bytes):
-        try:
-            return one(fmt, payload)
-        except (ValueError, struct.error):
-            return None
-
-    hasher = guarded if null_on_error else one
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "phash": pd.array(
-                        [
-                            hasher(f, p)
-                            for f, p in zip(pdf["format"], pdf["payload"])
-                        ],
-                        dtype="Int64",
-                    ),
-                }
-            )
-
-    return df.mapInPandas(run, schema=PHASH_SCHEMA)
+    return _map_rows(
+        df, PHASH_SCHEMA, one, ["media_id", "format", "payload"], null_on_error
+    )
 
 
 def phash_image_files(
@@ -347,57 +386,35 @@ def phash_image_files(
         "height", "width", "nChannels", "mode", "data",
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        for pdf in batches:
-            out_id, fps = [], []
-            for mid_, h, w, nc, mode, data in zip(
-                pdf["media_id"], pdf["height"], pdf["width"],
-                pdf["nChannels"], pdf["mode"], pdf["data"],
-            ):
-                fp = None
-                try:
-                    if pd.isna(mid_):
-                        raise ValueError("no digit run in image file name")
-                    buf = bytes(data) if data is not None else b""
-                    if mode == -1 or h <= 0 or w <= 0 or len(buf) != h * w * nc:
-                        raise ValueError("undecodable image file")
-                    arr = np.frombuffer(buf, np.uint8).reshape(h, w, nc)
-                    if nc == 1:
-                        px = arr[:, :, 0]
-                    elif nc == 3:
-                        px = arr[:, :, ::-1]          # OpenCV BGR -> RGB
-                    elif nc == 4:
-                        px = arr[:, :, [2, 1, 0]]     # BGRA -> RGB
-                    else:
-                        raise ValueError(f"unsupported channel count {nc}")
-                    if dihedral:
-                        # orbit-min canonical hash — identical values to
-                        # phash_media_dihedral (the decode lane changes
-                        # the rate, not the pixels, on lossless formats)
-                        fp = min(
-                            _phash_of_pixels(t, t.shape[1], t.shape[0])
-                            for t in (
-                                _apply_exif_orientation(px, o)
-                                for o in range(1, 9)
-                            )
-                        )
-                    else:
-                        fp = _phash_of_pixels(px, int(w), int(h))
-                except (ValueError, struct.error):
-                    if not null_on_error:
-                        raise
-                out_id.append(None if pd.isna(mid_) else int(mid_))
-                fps.append(fp)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(out_id, dtype="Int64"),
-                    "phash": pd.array(fps, dtype="Int64"),
-                }
-            )
+    def one(mid, h, w, nc, mode, data):
+        if pd.isna(mid):
+            raise ValueError("no digit run in image file name")
+        buf = bytes(data) if data is not None else b""
+        if mode == -1 or h <= 0 or w <= 0 or len(buf) != h * w * nc:
+            raise ValueError("undecodable image file")
+        arr = np.frombuffer(buf, np.uint8).reshape(h, w, nc)
+        if nc == 1:
+            px = arr[:, :, 0]
+        elif nc == 3:
+            px = arr[:, :, ::-1]          # OpenCV BGR -> RGB
+        elif nc == 4:
+            px = arr[:, :, [2, 1, 0]]     # BGRA -> RGB
+        else:
+            raise ValueError(f"unsupported channel count {nc}")
+        if dihedral:
+            # orbit-min canonical hash — identical values to
+            # phash_media_dihedral (the decode lane changes the rate, not
+            # the pixels, on lossless formats)
+            return [(mid, min(
+                _phash_of_pixels(t, t.shape[1], t.shape[0])
+                for t in (_apply_exif_orientation(px, o) for o in range(1, 9))
+            ))]
+        return [(mid, _phash_of_pixels(px, int(w), int(h)))]
 
-    return df.mapInPandas(run, schema=PHASH_SCHEMA)
+    cols = ["media_id", "height", "width", "nChannels", "mode", "data"]
+    return _map_rows(df, PHASH_SCHEMA, one, cols, null_on_error)
 
 
 #: payload format -> spilled file extension (ImageIO sniffs content, but
@@ -674,21 +691,11 @@ def resize_media(df: DataFrame, width: int, height: int) -> DataFrame:
     PIL/ffmpeg and keeps the schema/batching contract unchanged."""
     marker = f":{width}x{height}".encode()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [hashlib.md5((p if p is not None else b"") + marker).digest() for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "width": [width] * len(pdf),
-                    "height": [height] * len(pdf),
-                    "payload": out,
-                    "n_bytes": [len(b) for b in out],
-                }
-            )
+    def one(mid, kind, p):
+        out = hashlib.md5((p if p is not None else b"") + marker).digest()
+        return [(mid, kind, width, height, out, len(out))]
 
-    return df.mapInPandas(run, schema=RESIZED_SCHEMA)
+    return _map_rows(df, RESIZED_SCHEMA, one, ["media_id", "kind", "payload"])
 
 
 # ---------------------------------------------------------- real WAV codec
@@ -800,21 +807,13 @@ def synth_wav_stereo(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     downmix on real interleaved bytes; the SQL oracle mirrors the
     shifted floor-average arithmetic sample-for-sample."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                n = 50 + k % 200
-                left = [((k * 31 + i * 7) % 65536) - 32768 for i in range(n)]
-                right = [((k * 13 + i * 11) % 65536) - 32768 for i in range(n)]
-                payload = encode_wav_stereo(left, right, 8000 + (k % 8) * 1000)
-                rows.append((k, "audio", payload, "wav", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        n = 50 + k % 200
+        left = [((k * 31 + i * 7) % 65536) - 32768 for i in range(n)]
+        right = [((k * 13 + i * 11) % 65536) - 32768 for i in range(n)]
+        return encode_wav_stereo(left, right, 8000 + (k % 8) * 1000), "wav"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 def encode_wav_typed(
@@ -861,37 +860,30 @@ def synth_wav_depths(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
       rationals, exactly representable in float32, so the decoder's
       ``floor(f · 32768)`` equals the oracle's pure-integer ``n · 32``
       (with the +1.0 → 32767 clamp mirrored on both sides)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                bits = (8, 16, 24, 32)[k % 4]
-                channels = 1 + (k // 4) % 2
-                n = (40 + k % 50) * channels
-                if bits == 8:
-                    raw = [(7 * k + 11 * j) % 256 for j in range(n)]
-                elif bits == 16:
-                    raw = [(31 * k + 7 * j) % 65536 - 32768 for j in range(n)]
-                elif bits == 24:
-                    raw = [
-                        (131 * k + 17 * j) % 16777216 - 8388608
-                        for j in range(n)
-                    ]
-                else:
-                    raw = [
-                        ((13 * k + 5 * j) % 2049 - 1024) / 1024.0
-                        for j in range(n)
-                    ]
-                payload = encode_wav_typed(
-                    raw, 8000 + (k % 8) * 1000, bits, channels
-                )
-                rows.append((k, "audio", payload, "wav", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        bits = (8, 16, 24, 32)[k % 4]
+        channels = 1 + (k // 4) % 2
+        n = (40 + k % 50) * channels
+        if bits == 8:
+            raw = [(7 * k + 11 * j) % 256 for j in range(n)]
+        elif bits == 16:
+            raw = [(31 * k + 7 * j) % 65536 - 32768 for j in range(n)]
+        elif bits == 24:
+            raw = [
+                (131 * k + 17 * j) % 16777216 - 8388608
+                for j in range(n)
+            ]
+        else:
+            raw = [
+                ((13 * k + 5 * j) % 2049 - 1024) / 1024.0
+                for j in range(n)
+            ]
+        payload = encode_wav_typed(
+            raw, 8000 + (k % 8) * 1000, bits, channels
+        )
+        return payload, "wav"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 WAV_DEPTH_SCHEMA = StructType(
@@ -914,26 +906,15 @@ def wav_depth_stats(df: DataFrame) -> DataFrame:
     pins that the RIGHT branch ran, not just that some samples came
     out."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = bytes(payload)
-                bits = struct.unpack("<H", p[34:36])[0]
-                channels = struct.unpack("<H", p[22:24])[0]
-                rate, samples = decode_wav(p)
-                aa = [abs(s) for s in samples]
-                out.append(
-                    (int(mid), rate, bits, channels, len(samples),
-                     sum(aa), max(aa))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "sample_rate", "bits", "channels",
-                         "n_samples", "sum_abs", "max_abs"],
-            )
+    def one(mid, payload):
+        p = bytes(payload)
+        bits = struct.unpack("<H", p[34:36])[0]
+        channels = struct.unpack("<H", p[22:24])[0]
+        rate, samples = decode_wav(p)
+        aa = [abs(s) for s in samples]
+        return [(mid, rate, bits, channels, len(samples), sum(aa), max(aa))]
 
-    return df.mapInPandas(run, schema=WAV_DEPTH_SCHEMA)
+    return _map_rows(df, WAV_DEPTH_SCHEMA, one, ["media_id", "payload"])
 
 
 def synth_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -942,20 +923,12 @@ def synth_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     with ``50 + k mod 200`` samples: pure arithmetic an SQL oracle can
     mirror, so the encode→decode byte path is verifiable end-to-end."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                n = 50 + k % 200
-                samples = [((k * 31 + i * 7) % 65536) - 32768 for i in range(n)]
-                payload = encode_wav(samples, 8000 + (k % 8) * 1000)
-                rows.append((k, "audio", payload, "wav", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        n = 50 + k % 200
+        samples = [((k * 31 + i * 7) % 65536) - 32768 for i in range(n)]
+        return encode_wav(samples, 8000 + (k % 8) * 1000), "wav"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 def synth_audio_clips(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -978,31 +951,23 @@ def synth_audio_clips(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     signs flip, distances land 0-3).  Pure arithmetic an SQL oracle
     mirrors sample-for-sample."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                slot = k % 10
-                seed = k - slot if slot >= 8 else k
-                base = [
-                    ((17 * seed + (3 + seed % 5) * i * i
-                      + (11 + seed % 13) * i) % 4096) - 2048
-                    for i in range(1550)
-                ]
-                if slot == 8:
-                    samples = [2 * s for s in base]
-                elif slot == 9:
-                    samples = [s + (i % 127) - 63 for i, s in enumerate(base)]
-                else:
-                    samples = base
-                payload = encode_wav(samples, 16000)
-                rows.append((k, "audio", payload, "wav", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        slot = k % 10
+        seed = k - slot if slot >= 8 else k
+        base = [
+            ((17 * seed + (3 + seed % 5) * i * i
+              + (11 + seed % 13) * i) % 4096) - 2048
+            for i in range(1550)
+        ]
+        if slot == 8:
+            samples = [2 * s for s in base]
+        elif slot == 9:
+            samples = [s + (i % 127) - 63 for i, s in enumerate(base)]
+        else:
+            samples = base
+        return encode_wav(samples, 16000), "wav"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 AUDIO_FP_SCHEMA = StructType(
@@ -1063,7 +1028,7 @@ def audio_fingerprint(
             f"windows_per_sec must be >= 1, got {windows_per_sec}"
         )
 
-    def one(payload: bytes) -> int:
+    def one(mid, payload: bytes):
         rate, samples = decode_wav(bytes(payload))
         win = (
             window
@@ -1081,28 +1046,11 @@ def audio_fingerprint(
                 sum(e[g * stride : (g + 1) * stride])
                 for g in range(-(-len(e) // stride))
             ]
-        return sum(1 << w for w in range(len(e) - 1) if e[w + 1] > e[w])
+        return [(mid, sum(1 << w for w in range(len(e) - 1) if e[w + 1] > e[w]))]
 
-    def guarded(payload: bytes):
-        try:
-            return one(payload)
-        except (ValueError, struct.error, OverflowError):
-            return None
-
-    hasher = guarded if null_on_error else one
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "afp": pd.array(
-                        [hasher(p) for p in pdf["payload"]], dtype="Int64"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(run, schema=AUDIO_FP_SCHEMA)
+    return _map_rows(
+        df, AUDIO_FP_SCHEMA, one, ["media_id", "payload"], null_on_error
+    )
 
 
 def synth_audio_clips_offset(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1119,36 +1067,28 @@ def synth_audio_clips_offset(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     :func:`audio_subfingerprints`).  Pure arithmetic an SQL oracle
     mirrors sample-for-sample."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                slot = k % 10
-                seed = k - slot if slot >= 8 else k
+    def make(k: int):
+        slot = k % 10
+        seed = k - slot if slot >= 8 else k
 
-                def base(i: int) -> int:
-                    return (
-                        (17 * seed + (3 + seed % 5) * i * i
-                         + (11 + seed % 13) * i) % 4096
-                    ) - 2048
+        def base(i: int) -> int:
+            return (
+                (17 * seed + (3 + seed % 5) * i * i
+                 + (11 + seed % 13) * i) % 4096
+            ) - 2048
 
-                if slot == 8:
-                    samples = [base(i + 100) for i in range(1450)]
-                elif slot == 9:
-                    samples = [
-                        ((29 * seed + 7 * i * i + 3 * i) % 4096) - 2048
-                        for i in range(150)
-                    ] + [base(i) for i in range(1550)]
-                else:
-                    samples = [base(i) for i in range(1550)]
-                payload = encode_wav(samples, 16000)
-                rows.append((k, "audio", payload, "wav", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+        if slot == 8:
+            samples = [base(i + 100) for i in range(1450)]
+        elif slot == 9:
+            samples = [
+                ((29 * seed + 7 * i * i + 3 * i) % 4096) - 2048
+                for i in range(150)
+            ] + [base(i) for i in range(1550)]
+        else:
+            samples = [base(i) for i in range(1550)]
+        return encode_wav(samples, 16000), "wav"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 AUDIO_SUBFP_SCHEMA = StructType(
@@ -1174,34 +1114,26 @@ def synth_audio_clips_resampled(
     replays put different content in every window and never match; the
     oracle mirrors sample-for-sample."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                slot = k % 10
-                seed = k - slot if slot >= 8 else k
-                base = [
-                    ((17 * seed + (3 + seed % 5) * i * i
-                      + (11 + seed % 13) * i) % 4096) - 2048
-                    for i in range(1550)
-                ]
-                if slot == 8:
-                    samples = [s for s in base for _ in (0, 1)]
-                    rate = 32000
-                elif slot == 9:
-                    samples = [2 * s for s in base for _ in (0, 1)]
-                    rate = 32000
-                else:
-                    samples = base
-                    rate = 16000
-                payload = encode_wav(samples, rate)
-                rows.append((k, "audio", payload, "wav", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        slot = k % 10
+        seed = k - slot if slot >= 8 else k
+        base = [
+            ((17 * seed + (3 + seed % 5) * i * i
+              + (11 + seed % 13) * i) % 4096) - 2048
+            for i in range(1550)
+        ]
+        if slot == 8:
+            samples = [s for s in base for _ in (0, 1)]
+            rate = 32000
+        elif slot == 9:
+            samples = [2 * s for s in base for _ in (0, 1)]
+            rate = 32000
+        else:
+            samples = base
+            rate = 16000
+        return encode_wav(samples, rate), "wav"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 def audio_subfingerprints(
@@ -1233,7 +1165,7 @@ def audio_subfingerprints(
     if not (1 <= frame_bits <= 62):
         raise ValueError(f"frame_bits must be in [1, 62], got {frame_bits}")
 
-    def one(payload: bytes) -> list[tuple[int, int]]:
+    def one(mid, payload: bytes):
         _, samples = decode_wav(bytes(payload))
         n_win = len(samples) // window
         e = [
@@ -1241,46 +1173,21 @@ def audio_subfingerprints(
             for w in range(n_win)
         ]
         bits = [1 if e[w + 1] > e[w] else 0 for w in range(len(e) - 1)]
+        if len(bits) < frame_bits:
+            # decodable but too short to carry ANY sub-fingerprint
+            # (< frame_bits + 1 windows) — take the quarantine path
+            # instead of silently emitting zero rows and vanishing from
+            # pairing (the video_phash zero-frame contract)
+            raise ValueError("clip too short for any sub-fingerprint")
         return [
-            (w0, sum(bits[w0 + j] << j for j in range(frame_bits)))
+            (mid, w0, sum(bits[w0 + j] << j for j in range(frame_bits)))
             for w0 in range(len(bits) - frame_bits + 1)
         ]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_w, out_fp = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    subs = one(payload)
-                    if not subs:
-                        # decodable but too short to carry ANY
-                        # sub-fingerprint (< frame_bits + 1 windows) —
-                        # take the quarantine path instead of silently
-                        # emitting zero rows and vanishing from pairing
-                        # (the video_phash zero-frame contract)
-                        raise ValueError(
-                            "clip too short for any sub-fingerprint"
-                        )
-                except (ValueError, struct.error):
-                    if not null_on_error:
-                        raise
-                    out_id.append(int(mid))
-                    out_w.append(0)
-                    out_fp.append(None)
-                    continue
-                for w0, fp in subs:
-                    out_id.append(int(mid))
-                    out_w.append(w0)
-                    out_fp.append(fp)
-            yield pd.DataFrame(
-                {
-                    "media_id": out_id,
-                    "win_idx": out_w,
-                    "subfp": pd.array(out_fp, dtype="Int64"),
-                }
-            )
-
-    return df.mapInPandas(run, schema=AUDIO_SUBFP_SCHEMA)
+    return _map_rows(
+        df, AUDIO_SUBFP_SCHEMA, one, ["media_id", "payload"], null_on_error,
+        null_tail=(0, None),
+    )
 
 
 def audio_offset_pairs(
@@ -1427,19 +1334,12 @@ def wav_stats(df: DataFrame) -> DataFrame:
     emit integer audio statistics — integers, so engines compare exactly.
     Payload column drops at this stage; only 5 scalars flow on."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, samples = decode_wav(bytes(payload))
-                aa = [abs(s) for s in samples]
-                out.append((int(mid), rate, len(samples), sum(aa), max(aa) if aa else 0))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "sample_rate", "n_samples", "sum_abs", "max_abs"],
-            )
+    def one(mid, payload):
+        rate, samples = decode_wav(bytes(payload))
+        aa = [abs(s) for s in samples]
+        return [(mid, rate, len(samples), sum(aa), max(aa) if aa else 0)]
 
-    return df.mapInPandas(run, schema=WAV_STATS_SCHEMA)
+    return _map_rows(df, WAV_STATS_SCHEMA, one, ["media_id", "payload"])
 
 
 # ---------------------------------------------------------- real BMP codec
@@ -1507,34 +1407,26 @@ def synth_texture_bmp(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     edit.  Pure arithmetic an SQL oracle mirrors pixel-for-pixel."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                slot = k % 10
-                seed = k - slot if slot >= 8 else k
-                w, h = 8 + seed % 5, 8 + (3 * seed) % 7
-                xs = np.arange(w)[None, :]
-                ys = np.arange(h)[:, None]
-                base = (
-                    17 * seed + 3 * xs * xs + 7 * ys * ys
-                    + 5 * xs * ys + 11 * xs + 13 * ys
-                ) % 251
-                if slot == 8:
-                    gray = base + 4
-                elif slot == 9:
-                    gray = base - base // 16
-                else:
-                    gray = base
-                px = np.repeat(gray.astype("uint8")[:, :, None], 3, axis=2)
-                payload = encode_bmp(w, h, px)
-                rows.append((k, "image", payload, "bmp", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        slot = k % 10
+        seed = k - slot if slot >= 8 else k
+        w, h = 8 + seed % 5, 8 + (3 * seed) % 7
+        xs = np.arange(w)[None, :]
+        ys = np.arange(h)[:, None]
+        base = (
+            17 * seed + 3 * xs * xs + 7 * ys * ys
+            + 5 * xs * ys + 11 * xs + 13 * ys
+        ) % 251
+        if slot == 8:
+            gray = base + 4
+        elif slot == 9:
+            gray = base - base // 16
+        else:
+            gray = base
+        px = np.repeat(gray.astype("uint8")[:, :, None], 3, axis=2)
+        return encode_bmp(w, h, px), "bmp"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 def synth_bmp(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1543,23 +1435,15 @@ def synth_bmp(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     SQL oracle mirrors."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                w, h = 8 + k % 9, 8 + (3 * k) % 9
-                xs = np.arange(w)[None, :]
-                ys = np.arange(h)[:, None]
-                gray = ((k + 3 * xs + 5 * ys) % 256).astype("uint8")
-                px = np.repeat(gray[:, :, None], 3, axis=2)
-                payload = encode_bmp(w, h, px)
-                rows.append((k, "image", payload, "bmp", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        w, h = 8 + k % 9, 8 + (3 * k) % 9
+        xs = np.arange(w)[None, :]
+        ys = np.arange(h)[:, None]
+        gray = ((k + 3 * xs + 5 * ys) % 256).astype("uint8")
+        px = np.repeat(gray[:, :, None], 3, axis=2)
+        return encode_bmp(w, h, px), "bmp"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 def resize_bmp(df: DataFrame, width: int, height: int) -> DataFrame:
@@ -1569,21 +1453,14 @@ def resize_bmp(df: DataFrame, width: int, height: int) -> DataFrame:
     the stub :func:`resize_media` when the format is BMP."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                w, h, px = decode_bmp(bytes(payload))
-                sx = (np.arange(width) * w) // width
-                sy = (np.arange(height) * h) // height
-                out_px = px[sy[:, None], sx[None, :]]
-                out = encode_bmp(width, height, out_px)
-                rows.append((int(mid), kind, out, "bmp", len(out)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def one(mid, kind, payload):
+        w, h, px = decode_bmp(bytes(payload))
+        sx = (np.arange(width) * w) // width
+        sy = (np.arange(height) * h) // height
+        out = encode_bmp(width, height, px[sy[:, None], sx[None, :]])
+        return [(mid, kind, out, "bmp", len(out))]
 
-    return df.mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _map_rows(df, MEDIA_SCHEMA, one, ["media_id", "kind", "payload"])
 
 
 BMP_STATS_SCHEMA = StructType(
@@ -1599,17 +1476,12 @@ BMP_STATS_SCHEMA = StructType(
 def bmp_stats(df: DataFrame) -> DataFrame:
     """Decode BMP payloads → integer pixel statistics (exact for any SQL
     oracle): dimensions + sum of the red channel."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = decode_bmp(bytes(payload))
-                out.append((int(mid), w, h, int(px[:, :, 0].astype("int64").sum())))
-            yield pd.DataFrame(out, columns=["media_id", "width", "height", "sum_red"])
+    def one(mid, payload):
+        w, h, px = decode_bmp(bytes(payload))
+        return [(mid, w, h, int(px[:, :, 0].astype("int64").sum()))]
 
-    return df.mapInPandas(run, schema=BMP_STATS_SCHEMA)
+    return _map_rows(df, BMP_STATS_SCHEMA, one, ["media_id", "payload"])
 
 
 def sample_frames(df: DataFrame, every: int = 2) -> DataFrame:
@@ -1664,21 +1536,29 @@ def synth_pgm(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     verifiable end-to-end."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                w, h = 8 + k % 9, 8 + k % 7
-                ys, xs = np.mgrid[0:h, 0:w]
-                px = ((k * 13 + ys * w + xs * 3) % 256).astype(np.uint8)
-                payload = encode_pgm(w, h, px)
-                rows.append((k, "image", payload, "pgm", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        w, h = 8 + k % 9, 8 + k % 7
+        ys, xs = np.mgrid[0:h, 0:w]
+        px = ((k * 13 + ys * w + xs * 3) % 256).astype(np.uint8)
+        return encode_pgm(w, h, px), "pgm"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
+
+
+def _pixel_stats(decode, red_only: bool = False):
+    """Per-row ``(media_id, width, height, sum_px, max_px, ds2_sum)`` of
+    a still-image decoder's output — the exact integer statistics shared
+    by the PGM/PNG/JPEG/GIF stats stages, over every sample or, with
+    ``red_only``, over the red channel alone."""
+
+    def one(mid, payload):
+        w, h, px = decode(bytes(payload))
+        if red_only:
+            px = px[:, :, 0].astype("int64")
+        ds = px[::2, ::2]
+        return [(mid, w, h, int(px.sum()), int(px.max()), int(ds.sum()))]
+
+    return one
 
 
 PGM_STATS_SCHEMA = StructType(
@@ -1698,22 +1578,9 @@ def pgm_stats(df: DataFrame) -> DataFrame:
     integer pixel statistics and the sum of the ``[::2, ::2]``-sampled
     image (the frame-sample/resize arithmetic on a real byte path).
     Payloads drop here; six int64 scalars flow on."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = decode_pgm(bytes(payload))
-                ds = px[::2, ::2]
-                out.append(
-                    (int(mid), w, h, int(px.sum()), int(px.max()), int(ds.sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "width", "height", "sum_px", "max_px", "ds2_sum"],
-            )
-
-    return df.mapInPandas(run, schema=PGM_STATS_SCHEMA)
+    return _map_rows(
+        df, PGM_STATS_SCHEMA, _pixel_stats(decode_pgm), ["media_id", "payload"]
+    )
 
 
 # ---------------------------------------------------------- real PNG codec
@@ -1825,45 +1692,38 @@ def synth_png_variants(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     oracle mirrors through the decoder's palette-map / alpha-drop."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                w, h = 8 + k % 9, 8 + (3 * k) % 7
-                xs = np.arange(w)[None, :]
-                ys = np.arange(h)[:, None]
-                base = ((7 * k + 3 * xs + 5 * ys) % 256).astype(np.uint8)
-                v = k % 3
-                if v == 0:
-                    idx = ((7 * k + 3 * xs + 5 * ys) % 251).astype(np.uint8)
-                    plte = bytes(i for i in range(256) for _ in range(3))
-                    payload = encode_png_typed(w, h, idx, 3, plte)
-                elif v == 1:
-                    rgba = np.stack(
-                        [
-                            base,
-                            ((11 * k + 2 * xs + 3 * ys) % 256).astype(np.uint8)
-                            + 0 * base,
-                            ((13 * k + xs + 7 * ys) % 256).astype(np.uint8)
-                            + 0 * base,
-                            ((xs + ys) % 256).astype(np.uint8) + 0 * base,
-                        ],
-                        axis=2,
-                    )
-                    payload = encode_png_typed(w, h, rgba, 6)
-                else:
-                    ga = np.stack(
-                        [base, ((xs * ys) % 256).astype(np.uint8) + 0 * base],
-                        axis=2,
-                    )
-                    payload = encode_png_typed(w, h, ga, 4)
-                rows.append((k, "image", payload, "png", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
+    def make(k: int):
+        w, h = 8 + k % 9, 8 + (3 * k) % 7
+        xs = np.arange(w)[None, :]
+        ys = np.arange(h)[:, None]
+        base = ((7 * k + 3 * xs + 5 * ys) % 256).astype(np.uint8)
+        v = k % 3
+        if v == 0:
+            idx = ((7 * k + 3 * xs + 5 * ys) % 251).astype(np.uint8)
+            plte = bytes(i for i in range(256) for _ in range(3))
+            payload = encode_png_typed(w, h, idx, 3, plte)
+        elif v == 1:
+            rgba = np.stack(
+                [
+                    base,
+                    ((11 * k + 2 * xs + 3 * ys) % 256).astype(np.uint8)
+                    + 0 * base,
+                    ((13 * k + xs + 7 * ys) % 256).astype(np.uint8)
+                    + 0 * base,
+                    ((xs + ys) % 256).astype(np.uint8) + 0 * base,
+                ],
+                axis=2,
             )
+            payload = encode_png_typed(w, h, rgba, 6)
+        else:
+            ga = np.stack(
+                [base, ((xs * ys) % 256).astype(np.uint8) + 0 * base],
+                axis=2,
+            )
+            payload = encode_png_typed(w, h, ga, 4)
+        return payload, "png"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 #: Adam7 pass origins and strides: (x0, y0, dx, dy) per PNG spec §8.2
@@ -2026,21 +1886,13 @@ def synth_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     whole exercises every filter type.  Pure arithmetic, SQL-mirrorable."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                w, h = 8 + k % 9, 8 + (3 * k) % 7
-                ys, xs = np.mgrid[0:h, 0:w]
-                px = ((7 * k + 3 * xs + 5 * ys) % 256).astype(np.uint8)
-                payload = encode_png(w, h, px, row_filters=[(k + y) % 5 for y in range(h)])
-                rows.append((k, "image", payload, "png", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        w, h = 8 + k % 9, 8 + (3 * k) % 7
+        ys, xs = np.mgrid[0:h, 0:w]
+        px = ((7 * k + 3 * xs + 5 * ys) % 256).astype(np.uint8)
+        return encode_png(w, h, px, row_filters=[(k + y) % 5 for y in range(h)]), "png"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 def encode_png_interlaced(width: int, height: int, pixels, row_filters=None) -> bytes:
@@ -2116,23 +1968,16 @@ def synth_png_interlaced(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     VERBATIM."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                w, h = 8 + k % 9, 8 + (3 * k) % 7
-                ys, xs = np.mgrid[0:h, 0:w]
-                px = ((7 * k + 3 * xs + 5 * ys) % 256).astype(np.uint8)
-                payload = encode_png_interlaced(
-                    w, h, px, row_filters=[(k + r) % 5 for r in range(7 * h)]
-                )
-                rows.append((k, "image", payload, "png", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        w, h = 8 + k % 9, 8 + (3 * k) % 7
+        ys, xs = np.mgrid[0:h, 0:w]
+        px = ((7 * k + 3 * xs + 5 * ys) % 256).astype(np.uint8)
+        payload = encode_png_interlaced(
+            w, h, px, row_filters=[(k + r) % 5 for r in range(7 * h)]
+        )
+        return payload, "png"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 def resize_png(df: DataFrame, width: int, height: int) -> DataFrame:
@@ -2141,21 +1986,14 @@ def resize_png(df: DataFrame, width: int, height: int) -> DataFrame:
     MEDIA_SCHEMA in and out, like :func:`resize_bmp`."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                w, h, px = decode_png(bytes(payload))
-                sx = (np.arange(width) * w) // width
-                sy = (np.arange(height) * h) // height
-                out_px = px[sy[:, None], sx[None, :]]
-                out = encode_png(width, height, out_px)
-                rows.append((int(mid), kind, out, "png", len(out)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def one(mid, kind, payload):
+        w, h, px = decode_png(bytes(payload))
+        sx = (np.arange(width) * w) // width
+        sy = (np.arange(height) * h) // height
+        out = encode_png(width, height, px[sy[:, None], sx[None, :]])
+        return [(mid, kind, out, "png", len(out))]
 
-    return df.mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _map_rows(df, MEDIA_SCHEMA, one, ["media_id", "kind", "payload"])
 
 
 PNG_STATS_SCHEMA = StructType(
@@ -2174,22 +2012,9 @@ def png_stats(df: DataFrame) -> DataFrame:
     """REAL decode + numpy 2× downsample over the PNG byte path: inflate,
     unfilter, then report exact integer pixel statistics (same contract
     as :func:`pgm_stats`, so the oracle arithmetic carries over)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = decode_png(bytes(payload))
-                ds = px[::2, ::2]
-                out.append(
-                    (int(mid), w, h, int(px.sum()), int(px.max()), int(ds.sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "width", "height", "sum_px", "max_px", "ds2_sum"],
-            )
-
-    return df.mapInPandas(run, schema=PNG_STATS_SCHEMA)
+    return _map_rows(
+        df, PNG_STATS_SCHEMA, _pixel_stats(decode_png), ["media_id", "payload"]
+    )
 
 
 # --------------------------------------------------------- real JPEG codec
@@ -3296,24 +3121,16 @@ def synth_jpeg(
 
     enc = encode_jpeg_progressive if progressive else encode_jpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                w, h = 8 * (1 + k % 3), 8 * (1 + (3 * k + 1) % 2)
-                bys, bxs = np.mgrid[0 : h // 8, 0 : w // 8]
-                blocks = (128 + 2 * ((3 * k + 5 * bxs + 7 * bys) % 48)).astype(
-                    np.uint8
-                )
-                px = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
-                payload = enc(w, h, px)
-                rows.append((k, "image", payload, "jpeg", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        w, h = 8 * (1 + k % 3), 8 * (1 + (3 * k + 1) % 2)
+        bys, bxs = np.mgrid[0 : h // 8, 0 : w // 8]
+        blocks = (128 + 2 * ((3 * k + 5 * bxs + 7 * bys) % 48)).astype(
+            np.uint8
+        )
+        px = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
+        return enc(w, h, px), "jpeg"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 JPEG_STATS_SCHEMA = StructType(
@@ -3332,22 +3149,9 @@ def jpeg_stats(df: DataFrame) -> DataFrame:
     """REAL decode over the JPEG byte path: Huffman-decode, dequantize,
     IDCT, then report exact integer pixel statistics (same contract as
     :func:`png_stats`/:func:`pgm_stats`)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = decode_jpeg(bytes(payload))
-                ds = px[::2, ::2]
-                out.append(
-                    (int(mid), w, h, int(px.sum()), int(px.max()), int(ds.sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "width", "height", "sum_px", "max_px", "ds2_sum"],
-            )
-
-    return df.mapInPandas(run, schema=JPEG_STATS_SCHEMA)
+    return _map_rows(
+        df, JPEG_STATS_SCHEMA, _pixel_stats(decode_jpeg), ["media_id", "payload"]
+    )
 
 
 def synth_varied_bmp(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -3358,21 +3162,13 @@ def synth_varied_bmp(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     are pure id arithmetic an SQL oracle mirrors."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                w = 4 + (7 * k) % 61
-                h = 4 + (11 * k) % 93
-                px = np.full((h, w, 3), (37 * k) % 251, dtype=np.uint8)
-                payload = encode_bmp(w, h, px)
-                rows.append((k, "image", payload, "bmp", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        w = 4 + (7 * k) % 61
+        h = 4 + (11 * k) % 93
+        px = np.full((h, w, 3), (37 * k) % 251, dtype=np.uint8)
+        return encode_bmp(w, h, px), "bmp"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 DIMS_SCHEMA = StructType(
@@ -3457,35 +3253,12 @@ def media_dims(df: DataFrame, null_on_error: bool = False) -> DataFrame:
     headers raise (or null the row under ``null_on_error``).  Output:
     (media_id, width, height)."""
 
-    def one(fmt: str, payload):
-        return _header_dims(fmt, bytes(payload))
+    def one(mid, fmt: str, payload):
+        return [(mid,) + (_header_dims(fmt, bytes(payload)) or (None, None))]
 
-    def guarded(fmt: str, payload):
-        try:
-            return one(fmt, payload)
-        except (ValueError, struct.error):
-            return None
-
-    prober = guarded if null_on_error else one
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dims = [
-                prober(f, p) for f, p in zip(pdf["format"], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": pd.array(
-                        [d[0] if d else None for d in dims], dtype="Int64"
-                    ),
-                    "height": pd.array(
-                        [d[1] if d else None for d in dims], dtype="Int64"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(run, schema=DIMS_SCHEMA)
+    return _map_rows(
+        df, DIMS_SCHEMA, one, ["media_id", "format", "payload"], null_on_error
+    )
 
 
 def media_gate_conditions(w, h, min_side: int, max_aspect: int | None):
@@ -3644,41 +3417,34 @@ def synth_jpeg_exif(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     the parser must pass them through with null fields, not fail)."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                px = np.full((8, 8), 128, dtype=np.uint8)
-                payload = encode_jpeg(8, 8, px)
-                if k % 10 != 0:
-                    dt = (
-                        f"{2010 + k % 15:04d}:{1 + k % 12:02d}:"
-                        f"{1 + k % 28:02d} {k % 24:02d}:{k % 60:02d}:"
-                        f"{(7 * k) % 60:02d}"
-                    )
-                    dto = (
-                        f"{2009 + k % 15:04d}:{1 + k % 12:02d}:"
-                        f"{1 + k % 28:02d} {k % 24:02d}:{k % 60:02d}:"
-                        f"{(7 * k) % 60:02d}"
-                    )
-                    app1 = _build_exif_app1(
-                        "II" if k % 2 == 0 else "MM",
-                        f"CAM{k % 5}",
-                        f"MODEL-{k % 7}",
-                        dt,
-                        dto,
-                        1 + k % 8,
-                        100 + k % 900,
-                        50 + k % 500,
-                    )
-                    payload = payload[:2] + app1 + payload[2:]
-                rows.append((k, "image", payload, "jpeg", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
+    def make(k: int):
+        px = np.full((8, 8), 128, dtype=np.uint8)
+        payload = encode_jpeg(8, 8, px)
+        if k % 10 != 0:
+            dt = (
+                f"{2010 + k % 15:04d}:{1 + k % 12:02d}:"
+                f"{1 + k % 28:02d} {k % 24:02d}:{k % 60:02d}:"
+                f"{(7 * k) % 60:02d}"
             )
+            dto = (
+                f"{2009 + k % 15:04d}:{1 + k % 12:02d}:"
+                f"{1 + k % 28:02d} {k % 24:02d}:{k % 60:02d}:"
+                f"{(7 * k) % 60:02d}"
+            )
+            app1 = _build_exif_app1(
+                "II" if k % 2 == 0 else "MM",
+                f"CAM{k % 5}",
+                f"MODEL-{k % 7}",
+                dt,
+                dto,
+                1 + k % 8,
+                100 + k % 900,
+                50 + k % 500,
+            )
+            payload = payload[:2] + app1 + payload[2:]
+        return payload, "jpeg"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 EXIF_SCHEMA = StructType(
@@ -3819,58 +3585,18 @@ def exif_metadata(df: DataFrame, null_on_error: bool = False) -> DataFrame:
     byte_order, orientation, make, model, datetime, datetime_original,
     exif_w, exif_h)."""
 
-    def one(payload: bytes):
+    fields = EXIF_SCHEMA.fieldNames()[2:]
+
+    def one(mid, payload: bytes):
         tiff = _find_exif_tiff(bytes(payload))
-        return None if tiff is None else _parse_exif_tiff(tiff)
+        if tiff is None:
+            return [(mid, False) + (None,) * len(fields)]
+        meta = _parse_exif_tiff(tiff)
+        return [(mid, True) + tuple(meta[f] for f in fields)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    meta = one(payload)
-                except (ValueError, struct.error):
-                    if not null_on_error:
-                        raise
-                    rows.append(
-                        (int(mid), None, None, None, None, None, None,
-                         None, None, None)
-                    )
-                    continue
-                if meta is None:
-                    rows.append(
-                        (int(mid), False, None, None, None, None, None,
-                         None, None, None)
-                    )
-                else:
-                    rows.append(
-                        (
-                            int(mid),
-                            True,
-                            meta["byte_order"],
-                            meta["orientation"],
-                            meta["make"],
-                            meta["model"],
-                            meta["datetime"],
-                            meta["datetime_original"],
-                            meta["exif_w"],
-                            meta["exif_h"],
-                        )
-                    )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "has_exif", "byte_order", "orientation",
-                    "make", "model", "datetime", "datetime_original",
-                    "exif_w", "exif_h",
-                ],
-            )
-            for c in ("orientation", "exif_w", "exif_h"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            out["has_exif"] = pd.array(out["has_exif"], dtype="boolean")
-            yield out
-
-    return df.mapInPandas(run, schema=EXIF_SCHEMA)
+    return _map_rows(
+        df, EXIF_SCHEMA, one, ["media_id", "payload"], null_on_error
+    )
 
 
 def _apply_exif_orientation(px, orientation: int):
@@ -3912,8 +3638,9 @@ def phash_media_oriented(df: DataFrame, null_on_error: bool = False) -> DataFram
     index permutations), and the SAME fixed-point DCT hash runs on the
     normalized matrix.  Output: (media_id, phash) — pair with
     ``hamming_near_pairs`` exactly like the raw hash."""
+    import numpy as np
 
-    def one(fmt: str, payload: bytes) -> int:
+    def one(mid, fmt: str, payload: bytes):
         data = bytes(payload)
         orientation = 1
         if fmt in ("jpeg", "jpg"):
@@ -3931,36 +3658,12 @@ def phash_media_oriented(df: DataFrame, null_on_error: bool = False) -> DataFram
             raise ValueError(
                 f"phash_media_oriented: no real codec for format {fmt!r}"
             )
-        w, h, px = decoded
-        import numpy as np
+        px = _apply_exif_orientation(np.asarray(decoded[2]), orientation)
+        return [(mid, _phash_of_pixels(px, px.shape[1], px.shape[0]))]
 
-        px = _apply_exif_orientation(np.asarray(px), orientation)
-        return _phash_of_pixels(px, px.shape[1], px.shape[0])
-
-    def guarded(fmt: str, payload: bytes):
-        try:
-            return one(fmt, payload)
-        except (ValueError, struct.error):
-            return None
-
-    hasher = guarded if null_on_error else one
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "phash": pd.array(
-                        [
-                            hasher(f, p)
-                            for f, p in zip(pdf["format"], pdf["payload"])
-                        ],
-                        dtype="Int64",
-                    ),
-                }
-            )
-
-    return df.mapInPandas(run, schema=PHASH_SCHEMA)
+    return _map_rows(
+        df, PHASH_SCHEMA, one, ["media_id", "format", "payload"], null_on_error
+    )
 
 
 def phash_media_dihedral(df: DataFrame, null_on_error: bool = False) -> DataFrame:
@@ -3981,43 +3684,21 @@ def phash_media_dihedral(df: DataFrame, null_on_error: bool = False) -> DataFram
     Output: (media_id, phash) — pair with ``hamming_near_pairs``."""
     import numpy as np
 
-    def one(fmt: str, payload: bytes) -> int:
+    def one(mid, fmt: str, payload: bytes):
         decoded = _decode_pixels(fmt, bytes(payload))
         if decoded is None:
             raise ValueError(
                 f"phash_media_dihedral: no real codec for format {fmt!r}"
             )
-        _, _, px = decoded
-        px = np.asarray(px)
-        return min(
+        px = np.asarray(decoded[2])
+        return [(mid, min(
             _phash_of_pixels(t, t.shape[1], t.shape[0])
             for t in (_apply_exif_orientation(px, o) for o in range(1, 9))
-        )
+        ))]
 
-    def guarded(fmt: str, payload: bytes):
-        try:
-            return one(fmt, payload)
-        except (ValueError, struct.error):
-            return None
-
-    hasher = guarded if null_on_error else one
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "phash": pd.array(
-                        [
-                            hasher(f, p)
-                            for f, p in zip(pdf["format"], pdf["payload"])
-                        ],
-                        dtype="Int64",
-                    ),
-                }
-            )
-
-    return df.mapInPandas(run, schema=PHASH_SCHEMA)
+    return _map_rows(
+        df, PHASH_SCHEMA, one, ["media_id", "format", "payload"], null_on_error
+    )
 
 
 def synth_jpeg_dihedral(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -4039,35 +3720,27 @@ def synth_jpeg_dihedral(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     distinct (150 planted pairs + 1 near-miss at sf0.01)."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                slot = k % 10
-                seed = k - slot if slot >= 8 else k
-                w, h = 8 * (8 + seed % 3), 8 * (8 + (3 * seed + 1) % 2)
-                bys, bxs = np.mgrid[0 : h // 8, 0 : w // 8]
-                blocks = (
-                    128 + 2 * (
-                        (3 * seed
-                         + (5 + seed % 17) * bxs
-                         + (7 + seed % 13) * bys
-                         + (1 + seed % 5) * bxs * bys) % 48
-                    )
-                ).astype(np.uint8)
-                px = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
-                if slot == 8:
-                    px = np.rot90(px, k=1)
-                elif slot == 9:
-                    px = px[:, ::-1]
-                payload = encode_jpeg(px.shape[1], px.shape[0], px)
-                rows.append((k, "image", payload, "jpeg", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
+    def make(k: int):
+        slot = k % 10
+        seed = k - slot if slot >= 8 else k
+        w, h = 8 * (8 + seed % 3), 8 * (8 + (3 * seed + 1) % 2)
+        bys, bxs = np.mgrid[0 : h // 8, 0 : w // 8]
+        blocks = (
+            128 + 2 * (
+                (3 * seed
+                 + (5 + seed % 17) * bxs
+                 + (7 + seed % 13) * bys
+                 + (1 + seed % 5) * bxs * bys) % 48
             )
+        ).astype(np.uint8)
+        px = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
+        if slot == 8:
+            px = np.rot90(px, k=1)
+        elif slot == 9:
+            px = px[:, ::-1]
+        return encode_jpeg(px.shape[1], px.shape[0], px), "jpeg"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 def synth_jpeg_oriented(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -4092,46 +3765,39 @@ def synth_jpeg_oriented(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     AC spectrum would pair with every other constant image)."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                slot = k % 10
-                seed = k - slot if slot >= 8 else k
-                w, h = 8 * (2 + seed % 3), 8 * (2 + (3 * seed + 1) % 2)
-                bys, bxs = np.mgrid[0 : h // 8, 0 : w // 8]
-                blocks = (
-                    128 + 2 * (
-                        (3 * seed
-                         + (5 + seed % 17) * bxs
-                         + (7 + seed % 13) * bys
-                         + (1 + seed % 5) * bxs * bys) % 48
-                    )
-                ).astype(np.uint8)
-                px = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
-                orientation = 1
-                if slot == 8:
-                    px = np.rot90(px, k=1)   # stored CCW; display = CW
-                    orientation = 6
-                elif slot == 9:
-                    px = px[:, ::-1]         # stored mirrored
-                    orientation = 2
-                payload = encode_jpeg(px.shape[1], px.shape[0], px)
-                if slot >= 8 or k % 2 == 0:
-                    app1 = _build_exif_app1(
-                        "II" if k % 2 == 0 else "MM",
-                        "CAM", "M",
-                        "2020:01:01 00:00:00", "2020:01:01 00:00:00",
-                        orientation, px.shape[1], px.shape[0],
-                    )
-                    payload = payload[:2] + app1 + payload[2:]
-                rows.append((k, "image", payload, "jpeg", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
+    def make(k: int):
+        slot = k % 10
+        seed = k - slot if slot >= 8 else k
+        w, h = 8 * (2 + seed % 3), 8 * (2 + (3 * seed + 1) % 2)
+        bys, bxs = np.mgrid[0 : h // 8, 0 : w // 8]
+        blocks = (
+            128 + 2 * (
+                (3 * seed
+                 + (5 + seed % 17) * bxs
+                 + (7 + seed % 13) * bys
+                 + (1 + seed % 5) * bxs * bys) % 48
             )
+        ).astype(np.uint8)
+        px = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
+        orientation = 1
+        if slot == 8:
+            px = np.rot90(px, k=1)   # stored CCW; display = CW
+            orientation = 6
+        elif slot == 9:
+            px = px[:, ::-1]         # stored mirrored
+            orientation = 2
+        payload = encode_jpeg(px.shape[1], px.shape[0], px)
+        if slot >= 8 or k % 2 == 0:
+            app1 = _build_exif_app1(
+                "II" if k % 2 == 0 else "MM",
+                "CAM", "M",
+                "2020:01:01 00:00:00", "2020:01:01 00:00:00",
+                orientation, px.shape[1], px.shape[0],
+            )
+            payload = payload[:2] + app1 + payload[2:]
+        return payload, "jpeg"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 # ------------------------------------------------------------ real GIF codec
@@ -4765,23 +4431,8 @@ def gif_stats(df: DataFrame) -> DataFrame:
     exact integer pixel statistics on the red channel (the grayscale
     synth's palette is ``(i, i, i)``, so red = the original gray value —
     same contract as :func:`jpeg_stats`)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = decode_gif(bytes(payload))
-                g = px[:, :, 0].astype("int64")
-                ds = g[::2, ::2]
-                out.append(
-                    (int(mid), w, h, int(g.sum()), int(g.max()), int(ds.sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "width", "height", "sum_px", "max_px", "ds2_sum"],
-            )
-
-    return df.mapInPandas(run, schema=GIF_STATS_SCHEMA)
+    one = _pixel_stats(decode_gif, red_only=True)
+    return _map_rows(df, GIF_STATS_SCHEMA, one, ["media_id", "payload"])
 
 
 def synth_gif(
@@ -4799,25 +4450,17 @@ def synth_gif(
     pixel-for-pixel."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                w, h = 40 + k % 9, 36 + (3 * k) % 11
-                xs = np.arange(w)[None, :]
-                ys = np.arange(h)[:, None]
-                px = (
-                    (17 * k + 3 * xs * xs + 7 * ys * ys + 5 * xs * ys
-                     + 11 * xs + 13 * ys) % 251
-                ).astype(np.uint8)
-                payload = encode_gif(w, h, px, interlaced=interlaced)
-                rows.append((k, "image", payload, "gif", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        w, h = 40 + k % 9, 36 + (3 * k) % 11
+        xs = np.arange(w)[None, :]
+        ys = np.arange(h)[:, None]
+        px = (
+            (17 * k + 3 * xs * xs + 7 * ys * ys + 5 * xs * ys
+             + 11 * xs + 13 * ys) % 251
+        ).astype(np.uint8)
+        return encode_gif(w, h, px, interlaced=interlaced), "gif"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 def _gif_walk_blocks(payload: bytes):
@@ -4990,27 +4633,16 @@ def gif_anim_stats(df: DataFrame) -> DataFrame:
     thumbnails and perceptual dedup use).  Any GCE misparse, frame
     miscount, or first-frame decode drift breaks the oracle hash."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = bytes(payload)
-                w, h, n_frames, duration = gif_anim_info(p)
-                dw, dh, px = decode_gif(p)
-                if (dw, dh) != (w, h):
-                    raise ValueError("GIF first-frame dims != screen dims")
-                g = px[:, :, 0].astype("int64")
-                out.append(
-                    (int(mid), w, h, n_frames, duration,
-                     int(g.sum()), int(g.max()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "width", "height", "n_frames",
-                         "duration_cs", "first_sum_px", "first_max_px"],
-            )
+    def one(mid, payload):
+        p = bytes(payload)
+        w, h, n_frames, duration = gif_anim_info(p)
+        dw, dh, px = decode_gif(p)
+        if (dw, dh) != (w, h):
+            raise ValueError("GIF first-frame dims != screen dims")
+        g = px[:, :, 0].astype("int64")
+        return [(mid, w, h, n_frames, duration, int(g.sum()), int(g.max()))]
 
-    return df.mapInPandas(run, schema=GIF_ANIM_SCHEMA)
+    return _map_rows(df, GIF_ANIM_SCHEMA, one, ["media_id", "payload"])
 
 
 GIF_ANIM_META_SCHEMA = StructType(
@@ -5030,28 +4662,11 @@ def gif_anim_meta(df: DataFrame, null_on_error: bool = False) -> DataFrame:
     `analyze-media` report and gate-threshold tuning read.
     ``null_on_error=True`` emits NULL fields for structurally damaged
     payloads instead of failing the report."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, nf, dur = gif_anim_info(bytes(payload))
-                    out.append((int(mid), w, h, nf, dur))
-                except (ValueError, struct.error):
-                    if not null_on_error:
-                        raise
-                    out.append((int(mid), None, None, None, None))
-            res = pd.DataFrame(
-                out,
-                columns=["media_id", "width", "height", "n_frames",
-                         "duration_cs"],
-            )
-            for c in ("width", "height", "n_frames", "duration_cs"):
-                res[c] = pd.array(res[c], dtype="Int64")
-            yield res
-
-    return df.mapInPandas(run, schema=GIF_ANIM_META_SCHEMA)
+    return _map_rows(
+        df, GIF_ANIM_META_SCHEMA,
+        lambda mid, payload: [(mid,) + gif_anim_info(bytes(payload))],
+        ["media_id", "payload"], null_on_error,
+    )
 
 
 def gif_anim_features(payload: bytes) -> tuple:
@@ -5128,29 +4743,30 @@ def gif_feature_meta(df: DataFrame, null_on_error: bool = False) -> DataFrame:
     GIF corpus uses partial frames / transparency / interlace /
     restore-disposals (i.e. exercises the compositing reader), plus
     loop/comment metadata (r11), before any decode is paid for."""
+    return _map_rows(
+        df, GIF_FEATURES_SCHEMA,
+        lambda mid, payload: [(mid,) + gif_anim_features(bytes(payload))],
+        ["media_id", "payload"], null_on_error,
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    out.append((int(mid),) + gif_anim_features(bytes(payload)))
-                except (ValueError, struct.error):
-                    if not null_on_error:
-                        raise
-                    out.append((int(mid),) + (None,) * 9)
-            res = pd.DataFrame(
-                out,
-                columns=["media_id", "n_frames", "partial_frames",
-                         "transparent_frames", "interlaced_frames",
-                         "disposal_bg", "disposal_prev", "loop_count",
-                         "n_comments", "comment_bytes"],
-            )
-            for c in res.columns[1:]:
-                res[c] = pd.array(res[c], dtype="Int64")
-            yield res
 
-    return df.mapInPandas(run, schema=GIF_FEATURES_SCHEMA)
+def _video_rows(df: DataFrame, frames_of, null_on_error: bool) -> DataFrame:
+    """Per-frame pHash rows in the :data:`VIDEO_PHASH_SCHEMA` shape —
+    the ONE frame loop of every video-lane adapter: ``frames_of(payload)``
+    returns ``(w, h, frames)`` (grayscale or RGB frames; RGB goes through
+    the shared integer luma of :func:`_phash_of_pixels`).  Undecodable
+    payloads quarantine as one ``(media_id, 0, NULL)`` row."""
+
+    def one(mid, payload):
+        w, h, frames = frames_of(bytes(payload))
+        return [
+            (mid, i, _phash_of_pixels(fr, w, h)) for i, fr in enumerate(frames)
+        ]
+
+    return _map_rows(
+        df, VIDEO_PHASH_SCHEMA, one, ["media_id", "payload"], null_on_error,
+        null_tail=(0, None),
+    )
 
 
 def gif_video_phash(
@@ -5165,29 +4781,9 @@ def gif_video_phash(
     pass the page color (e.g. white) to pair originals against
     BROWSER-style flattens of disposal-2 streams; the default
     background matte reproduces the r10 hashes."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, frames = gif_frames(bytes(payload), matte=matte)
-                    for i, fr in enumerate(frames):
-                        g = (
-                            299 * fr[:, :, 0].astype("int64")
-                            + 587 * fr[:, :, 1].astype("int64")
-                            + 114 * fr[:, :, 2].astype("int64")
-                        ) // 1000
-                        rows.append((int(mid), i, _phash_of_pixels(g, w, h)))
-                except (ValueError, struct.error):
-                    if not null_on_error:
-                        raise
-                    rows.append((int(mid), 0, None))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "phash"]
-            )
-
-    return df.mapInPandas(run, schema=VIDEO_PHASH_SCHEMA)
+    return _video_rows(
+        df, lambda payload: gif_frames(payload, matte=matte), null_on_error
+    )
 
 
 def synth_gif_animated(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -5200,33 +4796,26 @@ def synth_gif_animated(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (36 + 3k mod 11)`` like the still synth."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                w, h = 40 + k % 9, 36 + (3 * k) % 11
-                n_frames = 2 + k % 4
-                delay = 4 + k % 7
-                xs = np.arange(w)[None, :]
-                ys = np.arange(h)[:, None]
-                base = (
-                    17 * k + 3 * xs * xs + 7 * ys * ys + 5 * xs * ys
-                    + 11 * xs + 13 * ys
-                )
-                frames = np.stack(
-                    [((base + 29 * f) % 251).astype(np.uint8)
-                     for f in range(n_frames)]
-                )
-                payload = encode_gif_animated(
-                    w, h, frames, [delay] * n_frames
-                )
-                rows.append((k, "image", payload, "gif", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        w, h = 40 + k % 9, 36 + (3 * k) % 11
+        n_frames = 2 + k % 4
+        delay = 4 + k % 7
+        xs = np.arange(w)[None, :]
+        ys = np.arange(h)[:, None]
+        base = (
+            17 * k + 3 * xs * xs + 7 * ys * ys + 5 * xs * ys
+            + 11 * xs + 13 * ys
+        )
+        frames = np.stack(
+            [((base + 29 * f) % 251).astype(np.uint8)
+             for f in range(n_frames)]
+        )
+        payload = encode_gif_animated(
+            w, h, frames, [delay] * n_frames
+        )
+        return payload, "gif"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 def synth_gif_animated_dups(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -5240,38 +4829,45 @@ def synth_gif_animated_dups(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     fold to the seed so the equal-length video pairing contract holds."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                slot = k % 10
-                seed = k - slot if slot >= 8 else k
-                w, h = 40 + seed % 9, 36 + (3 * seed) % 11
-                n_frames = 2 + seed % 4
-                delay = 4 + seed % 7
-                xs = np.arange(w)[None, :]
-                ys = np.arange(h)[:, None]
-                base = (
-                    17 * seed + 3 * xs * xs + 7 * ys * ys + 5 * xs * ys
-                    + 11 * xs + 13 * ys
-                )
-                frames = np.stack(
-                    [((base + 29 * f) % 251) for f in range(n_frames)]
-                )
-                if slot == 8:
-                    frames = frames + 4
-                elif slot == 9:
-                    frames = frames - frames // 16
-                payload = encode_gif_animated(
-                    w, h, frames.astype(np.uint8), [delay] * n_frames
-                )
-                rows.append((k, "image", payload, "gif", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        slot = k % 10
+        seed = k - slot if slot >= 8 else k
+        w, h = 40 + seed % 9, 36 + (3 * seed) % 11
+        n_frames = 2 + seed % 4
+        delay = 4 + seed % 7
+        xs = np.arange(w)[None, :]
+        ys = np.arange(h)[:, None]
+        base = (
+            17 * seed + 3 * xs * xs + 7 * ys * ys + 5 * xs * ys
+            + 11 * xs + 13 * ys
+        )
+        frames = np.stack(
+            [((base + 29 * f) % 251) for f in range(n_frames)]
+        )
+        if slot == 8:
+            frames = frames + 4
+        elif slot == 9:
+            frames = frames - frames // 16
+        payload = encode_gif_animated(
+            w, h, frames.astype(np.uint8), [delay] * n_frames
+        )
+        return payload, "gif"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
+
+
+def _position_weights(w: int, h: int):
+    """The ``1 + (y·w + x) mod 97`` weight grid of the position-weighted
+    frame sums: a correctly-valued but misplaced overlay changes them."""
+    import numpy as np
+
+    return (1 + (np.arange(h * w, dtype=np.int64) % 97)).reshape(h, w)
+
+
+def _red_sums(frame, wts) -> tuple[int, int]:
+    """Plain and position-weighted sums of an RGB frame's red channel."""
+    g = frame[:, :, 0].astype("int64")
+    return int(g.sum()), int((g * wts).sum())
 
 
 GIF_COMPOSITED_SCHEMA = StructType(
@@ -5293,26 +4889,15 @@ def gif_composited_stats(df: DataFrame, matte="background") -> DataFrame:
     weighting makes a correctly-valued but misplaced overlay (wrong
     offset, wrong disposal restore region, transposed de-interlace)
     break the oracle hash even when the plain sum survives."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, frames = gif_frames(bytes(payload), matte=matte)
-                wts = (1 + (np.arange(h * w, dtype=np.int64) % 97)).reshape(
-                    h, w
-                )
-                for i, fr in enumerate(frames):
-                    g = fr[:, :, 0].astype("int64")
-                    rows.append(
-                        (int(mid), i, int(g.sum()), int((g * wts).sum()))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "sum_px", "wsum_px"]
-            )
+    def one(mid, payload):
+        w, h, frames = gif_frames(bytes(payload), matte=matte)
+        wts = _position_weights(w, h)
+        return [
+            (mid, i) + _red_sums(fr, wts) for i, fr in enumerate(frames)
+        ]
 
-    return df.mapInPandas(run, schema=GIF_COMPOSITED_SCHEMA)
+    return _map_rows(df, GIF_COMPOSITED_SCHEMA, one, ["media_id", "payload"])
 
 
 def synth_gif_composited(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -5336,19 +4921,7 @@ def synth_gif_composited(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     Every composited pixel is pure id arithmetic, so a SQL oracle
     re-derives all three canvases CASE-by-CASE with no decoder."""
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                payload = _gif_composited_payload(int(k))
-                rows.append((int(k), "image", payload, "gif", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
-
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, lambda k: (_gif_composited_payload(k), "gif"))
 
 
 def _gif_composited_payload(k: int) -> bytes:
@@ -5401,42 +4974,35 @@ def synth_gif_local_palette(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     and breaks the red-channel oracle arithmetic)."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                w, h = 40 + k % 9, 36 + (3 * k) % 11
-                xs = np.arange(w)[None, :]
-                ys = np.arange(h)[:, None]
-                base = (
-                    (17 * k + 3 * xs * xs + 7 * ys * ys + 5 * xs * ys
-                     + 11 * xs + 13 * ys) % 251
-                ).astype(np.uint8)
-                pw, ph = 12 + k % 5, 10 + k % 4
-                us = np.arange(pw)[None, :]
-                vs = np.arange(ph)[:, None]
-                idx = ((11 * k + 3 * us + 5 * vs) % 64).astype(np.uint8)
-                pal = bytes(
-                    c
-                    for i in range(64)
-                    for c in ((3 * i + k) % 251, (5 * i + 2 * k) % 251,
-                              (7 * i + 3 * k) % 251)
-                )
-                payload = encode_gif_frames(
-                    w, h,
-                    [
-                        {"px": base, "delay_cs": 2, "disposal": 1},
-                        {"px": idx, "x": 2 + k % 7, "y": 3 + k % 5,
-                         "delay_cs": 3, "disposal": 0, "palette": pal},
-                    ],
-                )
-                rows.append((k, "image", payload, "gif", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        w, h = 40 + k % 9, 36 + (3 * k) % 11
+        xs = np.arange(w)[None, :]
+        ys = np.arange(h)[:, None]
+        base = (
+            (17 * k + 3 * xs * xs + 7 * ys * ys + 5 * xs * ys
+             + 11 * xs + 13 * ys) % 251
+        ).astype(np.uint8)
+        pw, ph = 12 + k % 5, 10 + k % 4
+        us = np.arange(pw)[None, :]
+        vs = np.arange(ph)[:, None]
+        idx = ((11 * k + 3 * us + 5 * vs) % 64).astype(np.uint8)
+        pal = bytes(
+            c
+            for i in range(64)
+            for c in ((3 * i + k) % 251, (5 * i + 2 * k) % 251,
+                      (7 * i + 3 * k) % 251)
+        )
+        payload = encode_gif_frames(
+            w, h,
+            [
+                {"px": base, "delay_cs": 2, "disposal": 1},
+                {"px": idx, "x": 2 + k % 7, "y": 3 + k % 5,
+                 "delay_cs": 3, "disposal": 0, "palette": pal},
+            ],
+        )
+        return payload, "gif"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 def synth_gif_composited_dups(
@@ -5487,31 +5053,24 @@ def synth_gif_composited_dups(
         C2[oy2:oy2 + ph2, ox2:ox2 + pw2] = P2
         return w, h, [C0, C1, C2]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                slot = k % 10
-                if slot < 8:
-                    payload = _gif_composited_payload(k)
-                else:
-                    w, h, frames = _composited(k - slot)
-                    shift = 4 if slot == 9 else 0
-                    payload = encode_gif_frames(
-                        w, h,
-                        [
-                            {"px": (fr + shift).astype(np.uint8),
-                             "delay_cs": 3 + i, "disposal": 1}
-                            for i, fr in enumerate(frames)
-                        ],
-                    )
-                rows.append((k, "image", payload, "gif", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
+    def make(k: int):
+        slot = k % 10
+        if slot < 8:
+            payload = _gif_composited_payload(k)
+        else:
+            w, h, frames = _composited(k - slot)
+            shift = 4 if slot == 9 else 0
+            payload = encode_gif_frames(
+                w, h,
+                [
+                    {"px": (fr + shift).astype(np.uint8),
+                     "delay_cs": 3 + i, "disposal": 1}
+                    for i, fr in enumerate(frames)
+                ],
             )
+        return payload, "gif"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 GIF_DUAL_MATTE_SCHEMA = StructType(
@@ -5545,37 +5104,19 @@ def gif_dual_matte_stats(
     if page_rgb.shape != (3,):
         raise ValueError("page matte must be an RGB triple")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, frames, bg = _gif_decode_frames_rgba(
-                    bytes(payload), need_trailer=True
-                )
-                wts = (
-                    1 + (np.arange(h * w, dtype=np.int64) % 97)
-                ).reshape(h, w)
-                for i, fr in enumerate(frames):
-                    gb = _gif_flatten_rgba(fr, bg)[:, :, 0].astype("int64")
-                    gp = _gif_flatten_rgba(fr, page_rgb)[:, :, 0].astype(
-                        "int64"
-                    )
-                    rows.append(
-                        (
-                            int(mid), i,
-                            int(gb.sum()), int((gb * wts).sum()),
-                            int(gp.sum()), int((gp * wts).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx",
-                    "sum_bg", "wsum_bg", "sum_page", "wsum_page",
-                ],
-            )
+    def one(mid, payload):
+        w, h, frames, bg = _gif_decode_frames_rgba(
+            bytes(payload), need_trailer=True
+        )
+        wts = _position_weights(w, h)
+        return [
+            (mid, i)
+            + _red_sums(_gif_flatten_rgba(fr, bg), wts)
+            + _red_sums(_gif_flatten_rgba(fr, page_rgb), wts)
+            for i, fr in enumerate(frames)
+        ]
 
-    return df.mapInPandas(run, schema=GIF_DUAL_MATTE_SCHEMA)
+    return _map_rows(df, GIF_DUAL_MATTE_SCHEMA, one, ["media_id", "payload"])
 
 
 def _gif_disposal2_geometry(k: int):
@@ -5660,22 +5201,7 @@ def synth_gif_disposal2(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     :func:`_gif_disposal2_payload`) — the case where spec-background
     and browser flattens diverge, gated by
     :func:`gif_dual_matte_stats`' per-matte sums."""
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                payload = _gif_disposal2_payload(int(k))
-                rows.append(
-                    (int(k), "image", payload, "gif", len(payload))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "payload", "format", "n_bytes"],
-            )
-
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, lambda k: (_gif_disposal2_payload(k), "gif"))
 
 
 def synth_gif_disposal2_dups(
@@ -5694,37 +5220,29 @@ def synth_gif_disposal2_dups(
     contract holds."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                slot = k % 10
-                if slot < 8:
-                    payload = _gif_disposal2_payload(k)
-                else:
-                    w, h, frames = _gif_disposal2_flat_frames(k - slot)
-                    if slot == 9:
-                        frames = [
-                            (fr.astype(np.int64) - fr // 16).astype(
-                                np.uint8
-                            )
-                            for fr in frames
-                        ]
-                    payload = encode_gif_frames(
-                        w, h,
-                        [
-                            {"px": fr, "delay_cs": 3 + i, "disposal": 1}
-                            for i, fr in enumerate(frames)
-                        ],
+    def make(k: int):
+        slot = k % 10
+        if slot < 8:
+            payload = _gif_disposal2_payload(k)
+        else:
+            w, h, frames = _gif_disposal2_flat_frames(k - slot)
+            if slot == 9:
+                frames = [
+                    (fr.astype(np.int64) - fr // 16).astype(
+                        np.uint8
                     )
-                rows.append((k, "image", payload, "gif", len(payload)))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "payload", "format", "n_bytes"],
+                    for fr in frames
+                ]
+            payload = encode_gif_frames(
+                w, h,
+                [
+                    {"px": fr, "delay_cs": 3 + i, "disposal": 1}
+                    for i, fr in enumerate(frames)
+                ],
             )
+        return payload, "gif"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 def synth_gif_loop_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -5742,38 +5260,30 @@ def synth_gif_loop_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     arithmetic for the oracle."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                w, h = 40 + k % 9, 36 + (3 * k) % 11
-                xs = np.arange(w)[None, :]
-                ys = np.arange(h)[:, None]
-                base = (
-                    17 * k + 3 * xs * xs + 7 * ys * ys + 5 * xs * ys
-                    + 11 * xs + 13 * ys
-                )
-                payload = encode_gif_frames(
-                    w, h,
-                    [
-                        {"px": ((base + 29 * f) % 251).astype(np.uint8),
-                         "delay_cs": 3 + f, "disposal": 1}
-                        for f in range(2)
-                    ],
-                    loop=None if k % 3 == 0 else (5 * k + 2) % 60000,
-                    comments=[
-                        bytes([(k + i) % 251]) * (1 + (k + i) % 13)
-                        for i in range(k % 3)
-                    ],
-                )
-                rows.append((k, "image", payload, "gif", len(payload)))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "payload", "format", "n_bytes"],
-            )
+    def make(k: int):
+        w, h = 40 + k % 9, 36 + (3 * k) % 11
+        xs = np.arange(w)[None, :]
+        ys = np.arange(h)[:, None]
+        base = (
+            17 * k + 3 * xs * xs + 7 * ys * ys + 5 * xs * ys
+            + 11 * xs + 13 * ys
+        )
+        payload = encode_gif_frames(
+            w, h,
+            [
+                {"px": ((base + 29 * f) % 251).astype(np.uint8),
+                 "delay_cs": 3 + f, "disposal": 1}
+                for f in range(2)
+            ],
+            loop=None if k % 3 == 0 else (5 * k + 2) % 60000,
+            comments=[
+                bytes([(k + i) % 251]) * (1 + (k + i) % 13)
+                for i in range(k % 3)
+            ],
+        )
+        return payload, "gif"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 # ------------------------------------------------------------- APNG codec
@@ -6182,29 +5692,9 @@ def apng_video_phash(
     in the :data:`VIDEO_PHASH_SCHEMA` shape, the SAME integer luma +
     fixed-point DCT chain, so ``video_near_pairs`` and the streaming
     index apply unchanged."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, frames = apng_frames(bytes(payload), matte=matte)
-                    for i, fr in enumerate(frames):
-                        g = (
-                            299 * fr[:, :, 0].astype("int64")
-                            + 587 * fr[:, :, 1].astype("int64")
-                            + 114 * fr[:, :, 2].astype("int64")
-                        ) // 1000
-                        rows.append((int(mid), i, _phash_of_pixels(g, w, h)))
-                except (ValueError, struct.error):
-                    if not null_on_error:
-                        raise
-                    rows.append((int(mid), 0, None))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "phash"]
-            ).astype({"phash": "Int64"})
-
-    return df.mapInPandas(run, schema=VIDEO_PHASH_SCHEMA)
+    return _video_rows(
+        df, lambda payload: apng_frames(payload, matte=matte), null_on_error
+    )
 
 
 def anim_video_phash(
@@ -6220,34 +5710,14 @@ def anim_video_phash(
     GIF LSD background color / the PNG bKGD chunk or black); payloads
     that are neither format raise (or NULL-quarantine)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    b = bytes(payload)
-                    if b[:6] in (b"GIF87a", b"GIF89a"):
-                        w, h, frames = gif_frames(b, matte=matte)
-                    elif b[:8] == _PNG_SIG:
-                        w, h, frames = apng_frames(b, matte=matte)
-                    else:
-                        raise ValueError("neither a GIF nor a PNG payload")
-                    for i, fr in enumerate(frames):
-                        g = (
-                            299 * fr[:, :, 0].astype("int64")
-                            + 587 * fr[:, :, 1].astype("int64")
-                            + 114 * fr[:, :, 2].astype("int64")
-                        ) // 1000
-                        rows.append((int(mid), i, _phash_of_pixels(g, w, h)))
-                except (ValueError, struct.error):
-                    if not null_on_error:
-                        raise
-                    rows.append((int(mid), 0, None))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "phash"]
-            ).astype({"phash": "Int64"})
+    def frames_of(b: bytes):
+        if b[:6] in (b"GIF87a", b"GIF89a"):
+            return gif_frames(b, matte=matte)
+        if b[:8] == _PNG_SIG:
+            return apng_frames(b, matte=matte)
+        raise ValueError("neither a GIF nor a PNG payload")
 
-    return df.mapInPandas(run, schema=VIDEO_PHASH_SCHEMA)
+    return _video_rows(df, frames_of, null_on_error)
 
 
 def apng_anim_features(payload: bytes) -> tuple:
@@ -6351,30 +5821,11 @@ def apng_feature_meta(df: DataFrame, null_on_error: bool = False) -> DataFrame:
     """Per-payload :func:`apng_anim_features` over a media frame — the
     cheap structural pass `analyze-media` reads for APNG corpora,
     before any inflate is paid for."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    out.append(
-                        (int(mid),) + apng_anim_features(bytes(payload))
-                    )
-                except (ValueError, struct.error):
-                    if not null_on_error:
-                        raise
-                    out.append((int(mid),) + (None,) * 8)
-            res = pd.DataFrame(
-                out,
-                columns=["media_id", "n_frames", "partial_frames",
-                         "over_frames", "dispose_bg", "dispose_prev",
-                         "num_plays", "default_hidden", "total_delay_ms"],
-            )
-            for c in res.columns[1:]:
-                res[c] = pd.array(res[c], dtype="Int64")
-            yield res
-
-    return df.mapInPandas(run, schema=APNG_FEATURES_SCHEMA)
+    return _map_rows(
+        df, APNG_FEATURES_SCHEMA,
+        lambda mid, payload: [(mid,) + apng_anim_features(bytes(payload))],
+        ["media_id", "payload"], null_on_error,
+    )
 
 
 APNG_DUAL_MATTE_SCHEMA = StructType(
@@ -6403,35 +5854,17 @@ def apng_dual_matte_stats(df: DataFrame) -> DataFrame:
     white = np.full(3, 255, dtype=np.uint8)
     black = np.zeros(3, dtype=np.uint8)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, frames, _bg, _plays = _apng_decode_frames_rgba(
-                    bytes(payload)
-                )
-                wts = (
-                    1 + (np.arange(h * w, dtype=np.int64) % 97)
-                ).reshape(h, w)
-                for i, fr in enumerate(frames):
-                    gw = _rgba_flatten(fr, white)[:, :, 0].astype("int64")
-                    gb = _rgba_flatten(fr, black)[:, :, 0].astype("int64")
-                    rows.append(
-                        (
-                            int(mid), i,
-                            int(gw.sum()), int((gw * wts).sum()),
-                            int(gb.sum()), int((gb * wts).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx",
-                    "sum_white", "wsum_white", "sum_black", "wsum_black",
-                ],
-            )
+    def one(mid, payload):
+        w, h, frames, _bg, _plays = _apng_decode_frames_rgba(bytes(payload))
+        wts = _position_weights(w, h)
+        return [
+            (mid, i)
+            + _red_sums(_rgba_flatten(fr, white), wts)
+            + _red_sums(_rgba_flatten(fr, black), wts)
+            for i, fr in enumerate(frames)
+        ]
 
-    return df.mapInPandas(run, schema=APNG_DUAL_MATTE_SCHEMA)
+    return _map_rows(df, APNG_DUAL_MATTE_SCHEMA, one, ["media_id", "payload"])
 
 
 def _apng_composited_fields(k: int):
@@ -6552,40 +5985,32 @@ def synth_apng_optimized_dups(
     The flatten frames derive from id arithmetic alone."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                slot = k % 10
-                if slot < 8:
-                    payload = _apng_composited_payload(k)
-                else:
-                    w, h, frames = _apng_composited_flat_frames(k - slot)
-                    if slot == 9:
-                        frames = [
-                            (fr.astype(np.int64) - fr // 16).astype(
-                                np.uint8
-                            )
-                            for fr in frames
-                        ]
-                    payload = encode_apng_frames(
-                        w, h,
-                        [
-                            {"px": np.dstack(
-                                [fr, fr, fr,
-                                 np.full((h, w), 255, np.uint8)]
-                            ), "dispose": 0, "blend": 0}
-                            for fr in frames
-                        ],
+    def make(k: int):
+        slot = k % 10
+        if slot < 8:
+            payload = _apng_composited_payload(k)
+        else:
+            w, h, frames = _apng_composited_flat_frames(k - slot)
+            if slot == 9:
+                frames = [
+                    (fr.astype(np.int64) - fr // 16).astype(
+                        np.uint8
                     )
-                rows.append((k, "image", payload, "png", len(payload)))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "payload", "format", "n_bytes"],
+                    for fr in frames
+                ]
+            payload = encode_apng_frames(
+                w, h,
+                [
+                    {"px": np.dstack(
+                        [fr, fr, fr,
+                         np.full((h, w), 255, np.uint8)]
+                    ), "dispose": 0, "blend": 0}
+                    for fr in frames
+                ],
             )
+        return payload, "png"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 def synth_apng_composited(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -6609,20 +6034,7 @@ def synth_apng_composited(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     Pure id arithmetic end to end, so the dual-matte oracle re-derives
     every flattened pixel CASE-by-CASE."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                payload = _apng_composited_payload(k)
-                rows.append((k, "image", payload, "png", len(payload)))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "payload", "format", "n_bytes"],
-            )
-
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, lambda k: (_apng_composited_payload(k), "png"))
 
 
 def synth_apng_gif_pairs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -6637,52 +6049,44 @@ def synth_apng_gif_pairs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     machinery — the cross-container dedup payoff."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                slot = k % 10
-                seed = k - slot if slot >= 8 else k
-                w, h = 40 + seed % 9, 36 + (3 * seed) % 11
-                xs = np.arange(w)[None, :]
-                ys = np.arange(h)[:, None]
-                base = (
-                    17 * seed + 3 * xs * xs + 7 * ys * ys + 5 * xs * ys
-                    + 11 * xs + 13 * ys
-                )
-                n_frames = 2 + seed % 4
-                if slot < 8:
-                    payload = encode_gif_frames(
-                        w, h,
-                        [
-                            {"px": ((base + 29 * f) % 251).astype(np.uint8),
-                             "delay_cs": 4 + seed % 7, "disposal": 1}
-                            for f in range(n_frames)
-                        ],
-                    )
-                    fmt = "gif"
-                else:
-                    add = 4 if slot == 9 else 0
-                    specs = []
-                    for f in range(n_frames):
-                        g = (
-                            ((base + 29 * f) % 251 + add) % 256
-                        ).astype(np.uint8) + np.zeros((h, w), np.uint8)
-                        specs.append(
-                            {"px": np.dstack(
-                                [g, g, g, np.full((h, w), 255, np.uint8)]
-                            ), "dispose": 0, "blend": 0}
-                        )
-                    payload = encode_apng_frames(w, h, specs)
-                    fmt = "png"
-                rows.append((k, "image", payload, fmt, len(payload)))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "payload", "format", "n_bytes"],
+    def make(k: int):
+        slot = k % 10
+        seed = k - slot if slot >= 8 else k
+        w, h = 40 + seed % 9, 36 + (3 * seed) % 11
+        xs = np.arange(w)[None, :]
+        ys = np.arange(h)[:, None]
+        base = (
+            17 * seed + 3 * xs * xs + 7 * ys * ys + 5 * xs * ys
+            + 11 * xs + 13 * ys
+        )
+        n_frames = 2 + seed % 4
+        if slot < 8:
+            payload = encode_gif_frames(
+                w, h,
+                [
+                    {"px": ((base + 29 * f) % 251).astype(np.uint8),
+                     "delay_cs": 4 + seed % 7, "disposal": 1}
+                    for f in range(n_frames)
+                ],
             )
+            fmt = "gif"
+        else:
+            add = 4 if slot == 9 else 0
+            specs = []
+            for f in range(n_frames):
+                g = (
+                    ((base + 29 * f) % 251 + add) % 256
+                ).astype(np.uint8) + np.zeros((h, w), np.uint8)
+                specs.append(
+                    {"px": np.dstack(
+                        [g, g, g, np.full((h, w), 255, np.uint8)]
+                    ), "dispose": 0, "blend": 0}
+                )
+            payload = encode_apng_frames(w, h, specs)
+            fmt = "png"
+        return payload, fmt
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 # ---------------------------------------------------------- real Y4M codec
@@ -6764,21 +6168,13 @@ def synth_y4m(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     the oracle mirrors the pixels directly."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                w, h, n = 8 + k % 5, 8 + (2 * k) % 3, 2 + k % 4
-                fs, ys, xs = np.mgrid[0:n, 0:h, 0:w]
-                px = ((11 * k + 3 * xs + 5 * ys + 17 * fs) % 256).astype(np.uint8)
-                payload = encode_y4m(w, h, px)
-                rows.append((k, "video", payload, "y4m", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        w, h, n = 8 + k % 5, 8 + (2 * k) % 3, 2 + k % 4
+        fs, ys, xs = np.mgrid[0:n, 0:h, 0:w]
+        px = ((11 * k + 3 * xs + 5 * ys + 17 * fs) % 256).astype(np.uint8)
+        return encode_y4m(w, h, px), "y4m"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 def synth_texture_y4m(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -6795,34 +6191,26 @@ def synth_texture_y4m(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     per-frame distances).  Pure arithmetic an SQL oracle mirrors."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                slot = k % 10
-                seed = k - slot if slot >= 8 else k
-                n = 3 + seed % 3
-                fs, ys, xs = np.mgrid[0:n, 0:16, 0:16]
-                base = (
-                    17 * seed
-                    + (3 + (seed + fs) % 5) * xs * xs
-                    + (11 + seed % 13) * ys * ys
-                    + 5 * xs * ys
-                ) % 251
-                if slot == 8:
-                    px = base + 4
-                elif slot == 9:
-                    px = base - base // 16
-                else:
-                    px = base
-                payload = encode_y4m(16, 16, px.astype(np.uint8))
-                rows.append((k, "video", payload, "y4m", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        slot = k % 10
+        seed = k - slot if slot >= 8 else k
+        n = 3 + seed % 3
+        fs, ys, xs = np.mgrid[0:n, 0:16, 0:16]
+        base = (
+            17 * seed
+            + (3 + (seed + fs) % 5) * xs * xs
+            + (11 + seed % 13) * ys * ys
+            + 5 * xs * ys
+        ) % 251
+        if slot == 8:
+            px = base + 4
+        elif slot == 9:
+            px = base - base // 16
+        else:
+            px = base
+        return encode_y4m(16, 16, px.astype(np.uint8)), "y4m"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 def synth_texture_y4m_trim(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -6837,34 +6225,26 @@ def synth_texture_y4m_trim(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     invariance).  Pure arithmetic an SQL oracle mirrors."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                slot = k % 10
-                seed = k - slot if slot >= 8 else k
-                n = 3 + seed % 3
-                fs, ys, xs = np.mgrid[0:n, 0:16, 0:16]
-                base = (
-                    17 * seed
-                    + (3 + (seed + fs) % 5) * xs * xs
-                    + (11 + seed % 13) * ys * ys
-                    + 5 * xs * ys
-                ) % 251
-                if slot == 8:
-                    px = base[1:]
-                elif slot == 9:
-                    px = base[1:] + 4
-                else:
-                    px = base
-                payload = encode_y4m(16, 16, px.astype(np.uint8))
-                rows.append((k, "video", payload, "y4m", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        slot = k % 10
+        seed = k - slot if slot >= 8 else k
+        n = 3 + seed % 3
+        fs, ys, xs = np.mgrid[0:n, 0:16, 0:16]
+        base = (
+            17 * seed
+            + (3 + (seed + fs) % 5) * xs * xs
+            + (11 + seed % 13) * ys * ys
+            + 5 * xs * ys
+        ) % 251
+        if slot == 8:
+            px = base[1:]
+        elif slot == 9:
+            px = base[1:] + 4
+        else:
+            px = base
+        return encode_y4m(16, 16, px.astype(np.uint8)), "y4m"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 def synth_texture_y4m_shots(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -6880,28 +6260,20 @@ def synth_texture_y4m_shots(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     oracle mirrors."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                seed = k
-                n = 2 * (2 + seed % 3)
-                fs, ys, xs = np.mgrid[0:n, 0:16, 0:16]
-                s2 = seed + 101 * (fs // 2)
-                px = (
-                    17 * s2
-                    + (3 + s2 % 5) * xs * xs
-                    + (11 + s2 % 13) * ys * ys
-                    + 5 * xs * ys
-                ) % 251 + 3 * (fs % 2)
-                payload = encode_y4m(16, 16, px.astype(np.uint8))
-                rows.append((k, "video", payload, "y4m", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        seed = k
+        n = 2 * (2 + seed % 3)
+        fs, ys, xs = np.mgrid[0:n, 0:16, 0:16]
+        s2 = seed + 101 * (fs // 2)
+        px = (
+            17 * s2
+            + (3 + s2 % 5) * xs * xs
+            + (11 + s2 % 13) * ys * ys
+            + 5 * xs * ys
+        ) % 251 + 3 * (fs % 2)
+        return encode_y4m(16, 16, px.astype(np.uint8)), "y4m"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 def synth_texture_y4m_shot_reuse(
@@ -6920,37 +6292,29 @@ def synth_texture_y4m_shot_reuse(
     SQL oracle mirrors."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k in pdf[id_col]:
-                k = int(k)
-                slot = k % 10
-                g = k - slot
-                n = 4 if slot >= 8 else 2 * (2 + k % 3)
-                fs, ys, xs = np.mgrid[0:n, 0:16, 0:16]
-                if slot == 8:
-                    s2 = np.where(fs < 2, k, g)
-                    add = 0 * fs
-                elif slot == 9:
-                    s2 = np.where(fs < 2, k, g + 101)
-                    add = np.where(fs < 2, 0, 4)
-                else:
-                    s2 = k + 101 * (fs // 2)
-                    add = 0 * fs
-                px = (
-                    17 * s2
-                    + (3 + s2 % 5) * xs * xs
-                    + (11 + s2 % 13) * ys * ys
-                    + 5 * xs * ys
-                ) % 247 + 2 * (fs % 2) + add
-                payload = encode_y4m(16, 16, px.astype(np.uint8))
-                rows.append((k, "video", payload, "y4m", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "format", "n_bytes"]
-            )
+    def make(k: int):
+        slot = k % 10
+        g = k - slot
+        n = 4 if slot >= 8 else 2 * (2 + k % 3)
+        fs, ys, xs = np.mgrid[0:n, 0:16, 0:16]
+        if slot == 8:
+            s2 = np.where(fs < 2, k, g)
+            add = 0 * fs
+        elif slot == 9:
+            s2 = np.where(fs < 2, k, g + 101)
+            add = np.where(fs < 2, 0, 4)
+        else:
+            s2 = k + 101 * (fs // 2)
+            add = 0 * fs
+        px = (
+            17 * s2
+            + (3 + s2 % 5) * xs * xs
+            + (11 + s2 % 13) * ys * ys
+            + 5 * xs * ys
+        ) % 247 + 2 * (fs % 2) + add
+        return encode_y4m(16, 16, px.astype(np.uint8)), "y4m"
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _synth(df, id_col, make)
 
 
 VIDEO_PHASH_SCHEMA = StructType(
@@ -6970,33 +6334,16 @@ def video_phash(df: DataFrame, null_on_error: bool = False) -> DataFrame:
     undecodable payload instead of failing the job (the ingest
     quarantine split); analytic queries keep the default raise."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, frames = decode_y4m(bytes(payload))
-                except (ValueError, struct.error):
-                    if not null_on_error:
-                        raise
-                    rows.append((int(mid), 0, None))
-                    continue
-                if len(frames) == 0:
-                    # a header-only stream decodes "successfully" with
-                    # zero frames — there is nothing to fingerprint, so
-                    # it must take the quarantine path, not silently
-                    # bypass perceptual dedup forever
-                    if not null_on_error:
-                        raise ValueError("zero-frame Y4M stream")
-                    rows.append((int(mid), 0, None))
-                    continue
-                for f, px in enumerate(frames):
-                    rows.append((int(mid), f, _phash_of_pixels(px, w, h)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "phash"]
-            ).astype({"phash": "Int64"})
+    def frames_of(payload: bytes):
+        w, h, frames = decode_y4m(payload)
+        if len(frames) == 0:
+            # a header-only stream decodes "successfully" with zero
+            # frames — there is nothing to fingerprint, so it must take
+            # the quarantine path, not silently bypass perceptual dedup
+            raise ValueError("zero-frame Y4M stream")
+        return w, h, frames
 
-    return df.mapInPandas(run, schema=VIDEO_PHASH_SCHEMA)
+    return _video_rows(df, frames_of, null_on_error)
 
 
 def video_shots(
@@ -7533,20 +6880,14 @@ def y4m_frame_stats(df: DataFrame, every: int = 2) -> DataFrame:
     :func:`png_stats`, and the real-codec successor of the stub-backed
     :func:`sample_frames` contract."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, frames = decode_y4m(bytes(payload))
-                for idx in range(0, len(frames), every):
-                    f = frames[idx]
-                    out.append((int(mid), idx, w, h, int(f.sum()), int(f.max())))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "frame_idx", "width", "height", "sum_px", "max_px"],
-            )
+    def one(mid, payload):
+        w, h, frames = decode_y4m(bytes(payload))
+        return [
+            (mid, idx, w, h, int(frames[idx].sum()), int(frames[idx].max()))
+            for idx in range(0, len(frames), every)
+        ]
 
-    return df.mapInPandas(run, schema=Y4M_FRAME_STATS_SCHEMA)
+    return _map_rows(df, Y4M_FRAME_STATS_SCHEMA, one, ["media_id", "payload"])
 
 
 WAV_WINDOW_SCHEMA = StructType(
@@ -7570,23 +6911,14 @@ def wav_window_stats(df: DataFrame, window: int = 50) -> DataFrame:
     partial."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                _, samples = decode_wav(bytes(payload))
-                v = np.asarray(samples, dtype=np.int64)
-                for w0 in range(0, len(v), window):
-                    seg = v[w0 : w0 + window]
-                    zc = int(((seg[:-1] * seg[1:]) < 0).sum())
-                    out.append(
-                        (int(mid), w0 // window, len(seg),
-                         int((seg * seg).sum()), zc)
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "window_idx", "n_in_window", "energy",
-                         "zero_crossings"],
-            )
+    def one(mid, payload):
+        _, samples = decode_wav(bytes(payload))
+        v = np.asarray(samples, dtype=np.int64)
+        out = []
+        for w0 in range(0, len(v), window):
+            seg = v[w0 : w0 + window]
+            zc = int(((seg[:-1] * seg[1:]) < 0).sum())
+            out.append((mid, w0 // window, len(seg), int((seg * seg).sum()), zc))
+        return out
 
-    return df.mapInPandas(run, schema=WAV_WINDOW_SCHEMA)
+    return _map_rows(df, WAV_WINDOW_SCHEMA, one, ["media_id", "payload"])

@@ -11093,126 +11093,9 @@ GROUP BY domain
     return o
 
 
-# Names that already have a green driver-issued row in CORRECTNESS_r03.json.
-# The driver checks only the FIRST 50 entries of queries() per round, so
-# queries() orders not-yet-driver-verified names first; anything new added to
-# _ALL_QUERIES (and absent from this set) automatically lands in the checked
-# prefix.  Update this set each round from the latest CORRECTNESS_r{N}.json.
-_DRIVER_VERIFIED = {
-    "root_scan", "projection", "semi_join", "anti_join", "multicol_semi_join",
-    "closure_customers", "closure_orders_recent", "closure_multi_root",
-    "slice_export_lineitem", "slice_manifest_counts", "sequence_last_value",
-    "scrub_deterministic", "scrub_pseudonym", "q1_pricing_summary",
-    "q3_top_orders", "q6_forecast_revenue", "q4_order_priority",
-    "q10_returned_items", "salted_join_revenue", "q5_region_revenue",
-    "window_top_orders", "events_bucket_agg", "stream_enrich",
-    "stream_tumbling", "stream_sliding", "stream_session", "stream_user_state",
-    "events_json_extract", "events_funnel", "events_sessionize", "events_asof",
-    "events_range_join", "events_retention", "dedup_exact", "dedup_jaccard",
-    "dedup_chunks", "dedup_rewrite", "boilerplate", "length_quantiles",
-    "dedup_containment", "minhash_sigs", "minhash_lsh", "dedup_clusters",
-    "simhash_sigs", "simhash_pairs", "doc_fingerprints", "token_stats",
-    "bpe_tokens", "quality", "language_id",
-}
-
-
-def _verified_from_files(paths) -> tuple[set[str], set[str]]:
-    """Names with a PASSING driver correctness row in the given
-    ``CORRECTNESS_r{N}.json`` files, split into ``(hash_verified,
-    rows_only)``: hash_match is the full oracle pass; ``err ==
-    "no_oracle"`` is the documented rows-only contract.  Failing or error
-    rows count as neither — those names must re-enter the checked prefix
-    next round."""
-    import json as _json
-
-    hashed: set[str] = set()
-    rows_only: set[str] = set()
-    for p in paths:
-        try:
-            with open(p) as f:
-                rows = _json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if row.get("hash_match"):
-                hashed.add(name)
-            elif row.get("err") == "no_oracle":
-                rows_only.add(name)
-    return hashed, rows_only
-
-
-def _driver_verified(paths=None) -> set[str]:
-    """Union of the static round-3 snapshot and every driver-issued
-    correctness file found at the repo root — so the prefix ordering
-    refreshes itself each round without hand-editing the name list.
-
-    A name whose only passing rows were rows-only (``no_oracle``) but that
-    NOW carries an ``oracle_sql()`` entry is demoted back to unverified:
-    its newly added hash gate has never been driver-checked (the
-    scrub_pseudonym structural-oracle upgrade).  ``paths`` overrides the
-    repo-root glob so the demotion invariant is unit-testable against
-    synthetic correctness files regardless of the driver's current state."""
-    import glob as _glob
-    import os
-
-    if paths is None:
-        root = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        paths = sorted(_glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-    hashed, rows_only = _verified_from_files(paths)
-    now_gated = set(oracle_sql())
-    return (_DRIVER_VERIFIED - (now_gated - hashed)) | hashed | (rows_only - now_gated)
-
-
-#: names that existed at round-3 judging time — the VERDICT's top item was
-#: getting THESE a driver correctness row, so among unverified queries
-#: they outrank anything added later (later additions self-heal in
-#: subsequent rounds; these were explicitly flagged)
-_R3_ERA = frozenset({
-    "root_scan", "projection", "semi_join", "anti_join", "multicol_semi_join",
-    "closure_customers", "closure_orders_recent", "closure_multi_root",
-    "slice_export_lineitem", "slice_manifest_counts", "sequence_last_value",
-    "scrub_deterministic", "scrub_pseudonym", "q1_pricing_summary",
-    "q3_top_orders", "q6_forecast_revenue", "q4_order_priority",
-    "q10_returned_items", "q14_promo_revenue", "q15_top_supplier",
-    "q18_large_orders", "q19_disjunctive_revenue", "lineitem_key_skew",
-    "nation_participation", "orders_running_total", "price_histogram",
-    "profile_orders", "balance_deciles", "customer_set_ops", "customer_scd2",
-    "revenue_rollup", "status_pivot", "orders_upsert", "stream_dedup",
-    "events_moving_avg", "dedup_incremental", "feature_hash", "lsh_recall",
-    "token_rarity", "lm_score", "ngram_vocab", "bm25_rank", "corpus_datasheet",
-    "html_extract", "pii_scrub", "split_assign", "decontam", "repetition",
-    "source_mix", "source_cap", "pack_sequences", "ann_ivf_kmeans", "pq_codes",
-    "ann_pq", "dedup_embedding_hi", "corpus_pipeline", "media_wav_stats",
-    "media_bmp_resize", "salted_join_revenue", "q5_region_revenue",
-    "window_top_orders", "events_bucket_agg", "stream_enrich",
-    "stream_tumbling", "stream_sliding", "stream_session", "stream_user_state",
-    "events_json_extract", "events_funnel", "events_sessionize", "events_asof",
-    "events_range_join", "events_retention", "dedup_exact", "dedup_jaccard",
-    "dedup_chunks", "dedup_rewrite", "boilerplate", "length_quantiles",
-    "dedup_containment", "minhash_sigs", "minhash_lsh", "dedup_clusters",
-    "simhash_sigs", "simhash_pairs", "doc_fingerprints", "token_stats",
-    "bpe_tokens", "quality", "language_id", "ann_brute", "ann_lsh", "ann_ivf",
-    "dedup_embedding", "media_decode", "media_frames", "media_resize",
-})
-
-
 def queries():
-    """Oracle-gated query registry, ordered for the driver's 50-entry cap.
-
-    Priority order: (1) unverified round-3-era names (the judge's explicit
-    pending set), (2) unverified later additions, (3) already-verified
-    names — so the driver's checked prefix always clears the oldest debt
-    first and newer queries self-heal in subsequent rounds.  The verified
-    set self-refreshes from the ``CORRECTNESS_r*.json`` files the driver
-    writes each round."""
-    all_q = _all_queries()
-    verified = _driver_verified()
-    ordered = {k: v for k, v in all_q.items() if k not in verified and k in _R3_ERA}
-    ordered.update({k: v for k, v in all_q.items() if k not in verified})
-    ordered.update(all_q)
-    return ordered
+    """Oracle-gated query registry, in registration order."""
+    return _all_queries()
 
 
 def _all_queries():
@@ -11397,14 +11280,12 @@ def _all_queries():
         "media_wav_stats": media_wav_stats,
         "media_pgm_stats": media_pgm_stats,
         "media_bmp_resize": media_bmp_resize,
-        # r5 additions stay LAST: the driver's 50-entry correctness window
-        # must clear the older unverified names first (consolidation round)
+        # r5 additions
         "media_png_stats": media_png_stats,
         "media_png_interlaced": media_png_interlaced,
         "url_canonical": url_canonical,
         "domain_stats": domain_stats,
-        # r6 additions, after the r5 ones for the same reason (24 old-debt
-        # names + these still fit the 50-row window with room to spare)
+        # r6 additions
         "media_jpeg_stats": media_jpeg_stats,
         "dedup_index_compacted": dedup_index_compacted,
         "ann_index_probe": ann_index_probe,
@@ -11416,8 +11297,7 @@ def _all_queries():
         "media_wav_windows": media_wav_windows,
         "dedup_span_incremental": dedup_span_incremental,
         "dedup_span_incremental_wide": dedup_span_incremental_wide,
-        # r7 additions (whole registry driver-verified after r6, so new
-        # names land straight in the checked window)
+        # r7 additions
         "bpe_train_batched": bpe_train_batched,
         "media_phash_pairs": media_phash_pairs,
         "media_phash_imageio": media_phash_imageio,

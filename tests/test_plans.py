@@ -369,3 +369,158 @@ def test_scrub_counter_single_udf_pass_no_range_exchange(plans):
     # partitioned (no WindowExec all-to-one-partition funnel)
     for spec in re.findall(r"windowspecdefinition\(([^)]*)\)", p):
         assert "_pid" in spec, p
+
+
+# ------------------------------------------------------------ source lints
+# AST checks over the package source: invariants that used to hold only
+# by care (no Spark session needed).
+
+import ast
+import os
+
+_PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                    "slice_db_spark")
+
+#: dict methods that mutate the receiver
+_DICT_WRITES = {"pop", "popitem", "clear", "update", "setdefault"}
+
+
+def _module_memos(tree: ast.Module) -> set[str]:
+    """Module-level names bound to an EMPTY dict literal — the memos a
+    query fills at run time (constant tables start non-empty)."""
+    memos = set()
+    for node in tree.body:
+        if isinstance(node, ast.Assign):
+            targets, value = node.targets, node.value
+        elif isinstance(node, ast.AnnAssign):
+            targets, value = [node.target], node.value
+        else:
+            continue
+        if isinstance(value, ast.Dict) and not value.keys:
+            memos |= {t.id for t in targets if isinstance(t, ast.Name)}
+    return memos
+
+
+def _unguarded_memo_writes(src: str) -> list[str]:
+    """Every write to a module-level memo inside a function that is not
+    lexically inside ``with _MEMO_LOCK:`` — item assignment/deletion,
+    rebinding, and the mutating dict methods.  A nested function resets
+    the guard: its body runs later, outside the enclosing ``with``."""
+    tree = ast.parse(src)
+    memos = _module_memos(tree)
+    bad: list[str] = []
+
+    def memo_ref(node) -> str | None:
+        if isinstance(node, ast.Subscript):
+            node = node.value
+        if isinstance(node, ast.Name) and node.id in memos:
+            return node.id
+        return None
+
+    def visit(node, guarded: bool) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            guarded = False
+        if isinstance(node, (ast.With, ast.AsyncWith)) and any(
+            isinstance(i.context_expr, ast.Name)
+            and i.context_expr.id == "_MEMO_LOCK"
+            for i in node.items
+        ):
+            guarded = True
+        if not guarded:
+            targets = []
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, (ast.AugAssign, ast.AnnAssign)):
+                targets = [node.target]
+            elif isinstance(node, ast.Delete):
+                targets = node.targets
+            for t in targets:
+                name = memo_ref(t)
+                if name:
+                    bad.append(f"line {node.lineno}: {name}")
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _DICT_WRITES
+                and memo_ref(node.func.value)
+            ):
+                bad.append(
+                    f"line {node.lineno}: {node.func.value.id}.{node.func.attr}"
+                )
+        for child in ast.iter_child_nodes(node):
+            visit(child, guarded)
+
+    for top in tree.body:
+        # module-level statements run once at import, single-threaded
+        if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            visit(top, False)
+    return bad
+
+
+def test_memo_writes_hold_memo_lock():
+    """Queries run side by side from driver thread pools: every write to
+    a module-level memo in plans/queries.py must hold ``_MEMO_LOCK``."""
+    with open(os.path.join(_PKG, "plans", "queries.py")) as f:
+        src = f.read()
+    memos = _module_memos(ast.parse(src))
+    # discovery must find today's memos, or the lint below is vacuous
+    assert {"_CATALOGS", "_SUBSETS", "_JP05_PAIRS", "_LSH_PAIRS",
+            "_FLAT_OPQ"} <= memos, memos
+    assert _unguarded_memo_writes(src) == []
+
+
+def test_memo_lint_catches_planted_unguarded_writes():
+    planted = '''
+_MEMO_LOCK = None
+_MEMO = {}
+TABLE = {"a": 1}
+
+def fill(k, v):
+    _MEMO[k] = v
+
+def drop(k):
+    with _MEMO_LOCK:
+        _MEMO.pop(k)
+    _MEMO.setdefault(k, 1)
+
+def later(k):
+    with _MEMO_LOCK:
+        def cb():
+            _MEMO.clear()
+        return cb
+
+def reset():
+    global _MEMO
+    _MEMO = {}
+    del _MEMO[1]
+    TABLE.update(b=2)
+'''
+    bad = _unguarded_memo_writes(planted)
+    assert [b.split(": ")[1] for b in bad] == [
+        "_MEMO", "_MEMO.setdefault", "_MEMO.clear", "_MEMO", "_MEMO",
+    ], bad
+
+
+def test_multimodal_map_in_pandas_only_in_map_rows():
+    """Every Python-worker stage in operators/multimodal.py goes through
+    the one row-mapper ``_map_rows`` (batch loop, typed output columns,
+    the quarantine rule) — a hand-written ``mapInPandas`` elsewhere would
+    bring the duplicated batch plumbing back."""
+    with open(os.path.join(_PKG, "operators", "multimodal.py")) as f:
+        tree = ast.parse(f.read())
+    sites: list[tuple[str, int]] = []
+
+    def visit(node, owner: str) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and owner == "":
+            owner = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "mapInPandas"
+        ):
+            sites.append((owner, node.lineno))
+        for child in ast.iter_child_nodes(node):
+            visit(child, owner)
+
+    visit(tree, "")
+    assert [owner for owner, _ in sites] == ["_map_rows"], sites
