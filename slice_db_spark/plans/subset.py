@@ -24,29 +24,37 @@ Spark-first re-design (NOT a translation):
   keys discovered by several edges in one round carry several tags and
   expand under the union of their allowances (round-synchronous reading of
   the reference's scheduler-dependent ordering).
-* Action budget: ONE persist+count per destination table per round (the
-  count doubles as the termination check and the broadcast-size estimate).
-  Catalyst sees everything else lazily — source-row re-attachment is one
-  join per source table per round, shared by all its outgoing edges
-  through the persisted-plan cache.
+* Action budget: ONE checkpoint+count per destination table per round
+  (the count doubles as the termination check and the broadcast-size
+  estimate).  Catalyst sees everything else lazily — source-row
+  re-attachment is one join per source table per round, shared by all its
+  outgoing edges through the persisted-plan cache.
 * Frontiers and visited sets hold **key columns only** (narrow rows); full
   rows re-attach by one semi-join at export (the reference similarly
   re-fetches rows by ctid, `slice_db/dump_temp_table.py:170-186`).
 * Small frontiers are **broadcast** — the analog of the reference loading
   frontier ids into an ANALYZEd temp table so the PG planner joins well
   (`slice_db/dump_temp_table.py:234-250`); large ones go through AQE.
-* ``localCheckpoint`` every few rounds truncates iterative lineage.
+* ``localCheckpoint`` every round truncates the iterative lineage, so a
+  round's plan stays the size of one round; the superseded round
+  checkpoints are released when the traversal ends.
 * Every table touched by the traversal is scanned ONCE: its key+FK-column
   projection is persisted up front and every round's discovery joins hit
   the cache instead of re-reading the source R×edges times (the reference
   equivalently keeps all ids server-side and never re-reads table data).
   The projection is a few percent of table width, so even at 100 TB the
   cached working set is cluster-RAM/disk sized.
+* Small traversals run in a **driver regime** that keeps the same state as
+  driver-side Arrow tables: per table the visited store holds every
+  physical row (scan columns) of each visited key, and the frontier one
+  (key, ``__blocked``) row per arrival.  The no-backtrack, visited and
+  first-edge checks are Arrow semi/anti joins, and lifting the state into
+  the distributed regime is one ``createDataFrame`` per table.
 
 Scale notes (100 TB, 1000 executors): per-round cost is bounded by frontier
 size whenever frontiers broadcast — the big-table side never shuffles, the
 scan is pruned to key+FK columns by Catalyst.  Visited sets are pure key
-columns (persist ``MEMORY_AND_DISK``); termination costs exactly one count
+columns (checkpointed ``MEMORY_AND_DISK``); termination costs exactly one count
 per active table per round.
 """
 
@@ -55,6 +63,8 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
@@ -64,7 +74,6 @@ from ..config.model import FORWARD, REVERSE, Root, SchemaConfig
 # Below this many frontier rows the discovery semi-join broadcasts the
 # frontier side (no shuffle of the big table).
 BROADCAST_ROWS = 2_000_000
-CHECKPOINT_EVERY = 5
 # Traversal-state budget for the driver regime (rows held on the driver —
 # the reference holds ALL ids driver-side in a numpy IntSet at ~4 B/row;
 # our rows carry a few key/FK values, so 200k ≈ tens of MB).
@@ -75,7 +84,11 @@ _BLOCKED = "__blocked"
 
 @dataclass
 class SubsetResult:
-    """Outcome of a traversal: per-table distinct key DataFrames + stats."""
+    """Outcome of a traversal: per-table distinct key DataFrames + stats.
+
+    ``history`` has one entry per round: ``new`` counts the next frontier's
+    (key, ``__blocked``) rows per table in both regimes, and ``mode`` is
+    ``driver`` or ``dist``."""
 
     keys: dict[str, DataFrame]
     rounds: int = 0
@@ -105,6 +118,26 @@ def _sig(rid: str, direction: str) -> str:
     return f"{rid}|{direction}"
 
 
+def _distinct(t: pa.Table) -> pa.Table:
+    return t.group_by(t.column_names).aggregate([])
+
+
+def _semi(left: pa.Table, right: pa.Table, keys: list[str], anti: bool = False) -> pa.Table:
+    """Rows of ``left`` whose ``keys`` occur (``anti``: do not occur) in
+    ``right``.  NULL keys never match, as in the Spark joins."""
+    how = "left anti" if anti else "left semi"
+    return left.join(right.select(keys), keys=keys, join_type=how)
+
+
+def _release(df: DataFrame) -> None:
+    """Drop the blocks of a persisted or locally checkpointed DataFrame
+    (``unpersist()`` does not reach a checkpoint's RDD)."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 class Subsetter:
     def __init__(
         self,
@@ -112,24 +145,18 @@ class Subsetter:
         catalog: dict[str, DataFrame],
         schema: SchemaConfig,
         broadcast_rows: int = BROADCAST_ROWS,
-        checkpoint_every: int = CHECKPOINT_EVERY,
         max_rounds: int = 200,
-        cache_scans: bool = True,
         driver_rows: int = DRIVER_ROWS,
         table_rows: dict[str, int] | None = None,
-        prefetch_scans: bool = True,
     ):
         schema.validate()
         self.spark = spark
         self.catalog = catalog
         self.schema = schema
         self.broadcast_rows = broadcast_rows
-        self.checkpoint_every = checkpoint_every
         self.max_rounds = max_rounds
-        self.cache_scans = cache_scans
         self.driver_rows = driver_rows
         self.table_rows = table_rows
-        self.prefetch_scans = prefetch_scans
         self._key_mult: dict[str, float] = {}
 
     # ------------------------------------------------------------------ util
@@ -190,17 +217,21 @@ class Subsetter:
         Two regimes, both producing identical closures:
 
         * **driver regime** (traversal state ≤ ``driver_rows``): visited and
-          frontier sets live in driver dicts — the distributed reading of the
-          reference's driver-side ``IntSet`` (`slice_db/collection/set.py`).
-          Each round runs ONE broadcast semi-join per active edge against the
-          cached scans, collected in parallel threads; dedup/no-backtrack
-          bookkeeping is plain Python.  No persists, no anti-joins, no
-          checkpoint lineage — a round costs one tiny Spark job per edge.
+          frontier sets are driver-side Arrow tables — the distributed
+          reading of the reference's driver-side ``IntSet``
+          (`slice_db/collection/set.py`).  Each round runs ONE broadcast
+          semi-join per active edge against the cached scans, collected with
+          ``toArrow`` in parallel threads; dedup/no-backtrack bookkeeping is
+          Arrow joins.  No persists, no Spark anti-joins, no checkpoint
+          lineage — a round costs one tiny Spark job per edge.
         * **distributed regime**: frontiers/visited as DataFrames with
           anti-join dedup (the 100 TB path).  Entered from the start when the
-          roots already exceed the budget, or mid-traversal when a round's
-          discoveries overflow it (the completed driver state is lifted into
-          DataFrames and the loop continues distributed).
+          roots already exceed the budget, or mid-traversal when a round
+          overflows it: the state after that round is lifted into DataFrames
+          and the loop continues distributed from the next round.  Only if
+          one of the round's jobs hit its row limit (so its rows are
+          truncated) is the round-start state lifted instead, and the round
+          redone distributed.
         """
         for root in roots:
             if root.table not in self.catalog:
@@ -217,7 +248,7 @@ class Subsetter:
             out = self._run_driver(roots, plan, scan_cols, scans, history)
             if isinstance(out, SubsetResult):
                 for df in persisted:
-                    df.unpersist()
+                    _release(df)
                 return out
             state = out  # mid-flight spill (or None: roots exceed budget)
 
@@ -238,12 +269,10 @@ class Subsetter:
             scan_cols.setdefault(dst, set(self._keys(dst))).update(dst_cols)
         scans: dict[str, DataFrame] = {}
         for t, cols in scan_cols.items():
-            df = self.catalog[t].select(*sorted(cols))
-            if self.cache_scans:
-                df = df.persist(StorageLevel.MEMORY_AND_DISK)
-                persisted.append(df)
+            df = self.catalog[t].select(*sorted(cols)).persist(StorageLevel.MEMORY_AND_DISK)
+            persisted.append(df)
             scans[t] = df
-        if self.cache_scans and self.prefetch_scans and len(scans) > 1:
+        if len(scans) > 1:
             # Warm every persisted scan CONCURRENTLY instead of paying each
             # table's first parquet read inside the round that first touches
             # it (which serializes reads across rounds: round 1 reads
@@ -265,21 +294,6 @@ class Subsetter:
                 threading.Thread(target=warm, daemon=True).start()
         return scan_cols, scans
 
-    def _local_df(self, rows, schema: StructType) -> DataFrame:
-        """Driver rows → DataFrame via Arrow (pandas): the plain-list path
-        builds a Python-RDD plan that re-pickles every row through Python
-        workers on EVERY action — ~3× slower per action at driver-regime
-        sizes and re-paid by each consumer join.  Arrow ships columnar
-        bytes instead.  Falls back to the row path for Arrow-hostile
-        types."""
-        try:
-            import pandas as pd
-
-            pdf = pd.DataFrame(list(rows), columns=[f.name for f in schema.fields])
-            return self.spark.createDataFrame(pdf, schema)
-        except Exception:
-            return self.spark.createDataFrame(list(rows), schema)
-
     def _key_schema(self, t: str, extra_blocked: bool = False) -> StructType:
         fields = [
             StructField(c, self.catalog[t].schema[c].dataType, True) for c in self._keys(t)
@@ -296,24 +310,25 @@ class Subsetter:
         from concurrent.futures import ThreadPoolExecutor
 
         budget = self.driver_rows
-        tcols: dict[str, list] = {}
 
-        def cols_of(t: str) -> list:
-            if t not in tcols:
-                tcols[t] = sorted(scan_cols[t]) if t in scan_cols else list(self._keys(t))
-            return tcols[t]
-
-        # ---- seed: predicate → key set → ALL physical rows sharing those
-        # keys (test data may contain duplicate key tuples; the closure is
-        # defined over key identity, so every row of a visited key both
-        # exports and expands — same as the distributed src_rows re-join).
+        # Every physical row of the given keys (test data may contain
+        # duplicate key tuples; the closure is defined over key identity, so
+        # every row of a visited key both exports and expands — same as the
+        # distributed src_rows re-join), one row past the budget at most.
         def by_key_rows(t: str, key_df):
             base = scans[t] if t in scans else self.catalog[t].select(*self._keys(t))
+            cols = sorted(scan_cols[t]) if t in scan_cols else self._keys(t)
             return (
                 base.join(F.broadcast(key_df), on=self._keys(t), how="left_semi")
-                .select(*cols_of(t))
+                .select(*cols)
                 .limit(budget + 1)
             )
+
+        def collect(jobs):
+            if not jobs:
+                return []
+            with ThreadPoolExecutor(max_workers=min(16, len(jobs))) as ex:
+                return list(ex.map(lambda j: (*j[:-1], j[-1].toArrow()), jobs))
 
         seed_jobs = []
         for root in roots:
@@ -324,39 +339,31 @@ class Subsetter:
                 .distinct()
             )
             seed_jobs.append((root.table, by_key_rows(root.table, seed_keys)))
-        with ThreadPoolExecutor(max_workers=min(16, len(seed_jobs))) as ex:
-            seed_rows = list(ex.map(lambda j: (j[0], j[1].collect()), seed_jobs))
+        # store[t]: every physical row of each visited key, in scan columns
+        # (they carry the FK values outgoing edges need, so rounds never
+        # re-fetch source rows).
+        store: dict[str, pa.Table] = {}
 
-        # store[t]: key tuple -> list of collected Rows (every physical row
-        # of the key; carries the FK values outgoing edges need, so rounds
-        # never re-fetch source rows).
-        store: dict[str, dict] = {}
-        # frontier[t]: key tuple -> set of blocked edge signatures (empty =
-        # unblocked root; multiple tags = discovered via several edges, blocked
-        # only for an edge ALL its arrivals block — same as the distributed
-        # row-per-tag encoding).
-        frontier: dict[str, dict] = {}
-        total_rows = 0
-        for t, rows in seed_rows:
-            ks = self._keys(t)
-            st = store.setdefault(t, {})
-            fr = frontier.setdefault(t, {})
-            seen_roots = set()
-            for row in rows:
-                k = tuple(row[c] for c in ks)
-                if k in st and k not in seen_roots:
-                    continue  # seeded by an earlier root (row set complete)
-                if k not in st:
-                    st[k] = []
-                    fr[k] = set()
-                    seen_roots.add(k)
-                st[k].append(row)
-                total_rows += 1
+        def absorb(t: str, rows: pa.Table) -> None:
+            # a key already stored has all its rows (an earlier root, or an
+            # earlier edge of the same round, returned its whole row set)
+            if t in store:
+                rows = pa.concat_tables([store[t], _semi(rows, store[t], self._keys(t), anti=True)])
+            store[t] = rows
+
+        for t, rows in collect(seed_jobs):
+            absorb(t, rows)
         # budget check AFTER dedup so rows shared by overlapping roots
         # count once (None → caller reseeds the distributed regime)
-        if total_rows > budget:
+        if sum(rows.num_rows for rows in store.values()) > budget:
             return None
-        frontier = {t: fr for t, fr in frontier.items() if fr}
+        # frontier[t]: one (key, __blocked) row per arrival; roots arrive
+        # unblocked (NULL)
+        frontier: dict[str, pa.Table] = {}
+        for t, rows in store.items():
+            keys = _distinct(rows.select(self._keys(t)))
+            if keys.num_rows:
+                frontier[t] = keys.append_column(_BLOCKED, pa.nulls(keys.num_rows, pa.string()))
 
         rounds = 0
         while frontier and rounds < self.max_rounds:
@@ -369,32 +376,30 @@ class Subsetter:
                 r = self.schema.references[rid]
                 out_cols = r.columns if d == FORWARD else r.reference_columns
                 dst_cols = r.reference_columns if d == FORWARD else r.columns
-                sig = _sig(rid, d)
-                st = store[src]
-                vals = set()
-                for k, tags in frontier[src].items():
-                    if tags == {sig}:
-                        continue  # no-backtrack: every arrival blocks this edge
-                    for row in st[k]:
-                        v = tuple(row[c] for c in out_cols)
-                        if None not in v:  # NULL FKs never equi-join
-                            vals.add(v)
-                if not vals:
-                    continue
                 dkeys = self._keys(dst)
+                # no-backtrack: a key expands unless every arrival blocks it
+                blocked = pc.fill_null(pc.equal(frontier[src][_BLOCKED], _sig(rid, d)), False)
+                open_keys = frontier[src].filter(pc.invert(blocked))
+                # NULL FKs never equi-join
+                vals = _semi(store[src], open_keys, self._keys(src)).select(out_cols).drop_null()
+                if not vals.num_rows:
+                    continue
+                vals = _distinct(vals)
                 if d == FORWARD and sorted(dst_cols) == sorted(dkeys):
                     # Forward edge onto the destination's OWN keys: the FK
                     # values ARE the destination keys, so the visited check
-                    # is a driver-side set subtraction (the reference's
-                    # IntSet membership, `slice_db/collection/set.py`) —
-                    # hub parents reached by every child (nation/region)
-                    # cost ZERO Spark jobs once visited, and a round whose
+                    # is a driver-side anti-join (the reference's IntSet
+                    # membership, `slice_db/collection/set.py`) — hub
+                    # parents reached by every child (nation/region) cost
+                    # ZERO Spark jobs once visited, and a round whose
                     # discoveries are all visited skips entirely.
-                    perm = [dst_cols.index(c) for c in dkeys]
-                    novel = {tuple(v[i] for i in perm) for v in vals} - set(store.get(dst, {}))
-                    if not novel:
+                    novel = vals.rename_columns(dst_cols).select(dkeys)
+                    if dst in store:
+                        visited = store[dst].select(dkeys)
+                        novel = _semi(novel.cast(visited.schema), visited, dkeys, anti=True)
+                    if not novel.num_rows:
                         continue
-                    key_df = self._local_df(sorted(novel), self._key_schema(dst))
+                    key_df = self.spark.createDataFrame(novel, self._key_schema(dst))
                     jobs.append((rid, d, dst, by_key_rows(dst, key_df)))
                     continue
                 fields = StructType(
@@ -403,103 +408,83 @@ class Subsetter:
                         for i, c in enumerate(out_cols)
                     ]
                 )
-                local = self._local_df(list(vals), fields)
+                local = self.spark.createDataFrame(vals.rename_columns(fields.names), fields)
                 cond = [F.col(c) == F.col(f"__k{i}") for i, c in enumerate(dst_cols)]
                 # no .distinct(): the downstream left_semi ignores build-side
                 # duplicates and the driver store dedups collected rows — a
                 # distinct here costs one extra shuffle stage per edge job
                 found_keys = (
-                    scans[dst]
-                    .join(F.broadcast(local), on=cond, how="left_semi")
-                    .select(*self._keys(dst))
+                    scans[dst].join(F.broadcast(local), on=cond, how="left_semi").select(*dkeys)
                 )
                 jobs.append((rid, d, dst, by_key_rows(dst, found_keys)))
 
-            results = []
-            if jobs:
-                with ThreadPoolExecutor(max_workers=min(16, len(jobs))) as ex:
-                    results = list(ex.map(lambda j: (j[0], j[1], j[2], j[3].collect()), jobs))
-
-            # Overflow check BEFORE mutating state: if this round's fresh
-            # discoveries blow the budget, redo the round distributed from
-            # the intact round-start state.  Count only never-visited keys'
-            # rows — hub keys (nation/region reached by every customer) are
-            # re-collected each round and must not trigger a spurious
-            # spill.  Rows discovered by two edges in the same round count
-            # twice: a conservative (early-spill) over-estimate.
-            fresh_rows = 0
-            for _, _, dst, rows in results:
-                st = store.get(dst, {})
-                ks = self._keys(dst)
-                fresh_rows += sum(1 for row in rows if tuple(row[c] for c in ks) not in st)
-            if total_rows + fresh_rows > budget:
+            results = collect(jobs)
+            if any(rows.num_rows > budget for *_, rows in results):
+                # a job hit its limit, so this round's rows are truncated:
+                # redo the round distributed from the round-start state
                 return self._lift_state(store, frontier, rounds - 1)
 
-            new_frontier: dict[str, dict] = {}
-            owners: dict[tuple, int] = {}  # (dst, key) -> discovering edge index
-            for ei, (rid, d, dst, rows) in enumerate(results):
-                inv = _sig(rid, _inverse(d))
+            visited_before = dict(store)
+            arrivals: dict[str, list[pa.Table]] = {}
+            for rid, d, dst, rows in results:
                 ks = self._keys(dst)
-                st = store.setdefault(dst, {})
-                fr = new_frontier.setdefault(dst, {})
-                for row in rows:
-                    k = tuple(row[c] for c in ks)
-                    ok = (dst, k)
-                    if k in st and ok not in owners:
-                        continue  # visited in an earlier round
-                    if ok not in owners:
-                        owners[ok] = ei
-                        st[k] = []
-                    if owners[ok] == ei:
-                        # two edges discovering the same key both return its
-                        # complete physical row set — only the first appends
-                        st[k].append(row)
-                        total_rows += 1
-                    fr.setdefault(k, set()).add(inv)
-            new_frontier = {t: fr for t, fr in new_frontier.items() if fr}
+                if dst in visited_before:
+                    rows = _semi(rows, visited_before[dst], ks, anti=True)
+                keys = _distinct(rows.select(ks))
+                tags = pa.array([_sig(rid, _inverse(d))] * keys.num_rows, pa.string())
+                arrivals.setdefault(dst, []).append(keys.append_column(_BLOCKED, tags))
+                absorb(dst, rows)
+            frontier = {}
+            for t, parts in arrivals.items():
+                fr = pa.concat_tables(parts)
+                if fr.num_rows:
+                    frontier[t] = fr
             history.append(
                 {
                     "round": rounds,
-                    "new": {t: len(fr) for t, fr in new_frontier.items()},
+                    "new": {t: fr.num_rows for t, fr in frontier.items()},
                     "sec": round(time.time() - t0, 3),
                     "mode": "driver",
                 }
             )
-            frontier = new_frontier
+            if frontier and sum(rows.num_rows for rows in store.values()) > budget:
+                # the round overflowed the budget: keep it and continue
+                # distributed from the next round
+                return self._lift_state(store, frontier, rounds)
 
-        keys = {}
-        row_counts = {}
+        visited = self._visited(store)
+        # lazy local checkpoint: the first action materializes JVM-side
+        # blocks and every later consumer (export joins, audits, manifest
+        # counts) reads those instead of re-shipping driver rows
+        return SubsetResult(
+            keys={t: df.localCheckpoint(eager=False) for t, (df, _) in visited.items()},
+            rounds=rounds,
+            row_counts={t: n for t, (_, n) in visited.items()},
+            history=history,
+        )
+
+    def _visited(self, store) -> dict[str, tuple[DataFrame, int]]:
+        """(DataFrame of the distinct visited keys, their count) per table."""
+        out = {}
         for t, rows in store.items():
-            if not rows:
-                continue
-            # Arrow construction (see _local_df) + lazy local checkpoint:
-            # the first action materializes JVM-side blocks and every later
-            # consumer (export joins, audits, manifest counts) reads those
-            # instead of re-shipping driver rows.
-            keys[t] = self._local_df(
-                list(rows.keys()), self._key_schema(t)
-            ).localCheckpoint(eager=False)
-            row_counts[t] = len(rows)
-        return SubsetResult(keys=keys, rounds=rounds, row_counts=row_counts, history=history)
+            keys = _distinct(rows.select(self._keys(t)))
+            if keys.num_rows:
+                out[t] = (self.spark.createDataFrame(keys, self._key_schema(t)), keys.num_rows)
+        return out
 
     def _lift_state(self, store, frontier, rounds_done):
-        """Lift driver dicts into the distributed-state tuple."""
-        visited, vsize, fdfs, fsize = {}, {}, {}, {}
-        for t, rows in store.items():
-            if not rows:
-                continue
-            visited[t] = self._local_df(list(rows.keys()), self._key_schema(t))
-            vsize[t] = len(rows)
-        for t, fr in frontier.items():
-            data = []
-            for k, tags in fr.items():
-                if tags:
-                    data.extend((*k, tag) for tag in tags)
-                else:
-                    data.append((*k, None))
-            fdfs[t] = self._local_df(data, self._key_schema(t, extra_blocked=True))
-            fsize[t] = len(data)
-        return fdfs, fsize, visited, vsize, rounds_done
+        """Lift the driver tables into the distributed-state tuple."""
+        visited = self._visited(store)
+        return (
+            {
+                t: self.spark.createDataFrame(fr, self._key_schema(t, extra_blocked=True))
+                for t, fr in frontier.items()
+            },
+            {t: fr.num_rows for t, fr in frontier.items()},
+            {t: df for t, (df, _) in visited.items()},
+            {t: n for t, (_, n) in visited.items()},
+            rounds_done,
+        )
 
     # ------------------------------------------------------- distributed mode
     def _seed_distributed(self, roots, persisted):
@@ -594,22 +579,18 @@ class Subsetter:
                     found.withColumn(_BLOCKED, F.lit(_sig(rid, _inverse(d))))
                 )
 
-            # Merge discoveries → candidate frontiers (persisted lazily),
-            # then ONE union-count job materializes every candidate and
-            # returns all sizes — termination + broadcast estimates for the
-            # whole round in a single Spark action.
+            # Merge discoveries → candidate frontiers, each a lazy local
+            # checkpoint (caches AND cuts the lineage), then ONE union-count
+            # job materializes every candidate and returns all sizes —
+            # termination + broadcast estimates for the whole round in a
+            # single Spark action.  Checkpoints stay in ``persisted`` until
+            # the traversal ends: a later checkpoint may still read them.
             candidates: dict[str, DataFrame] = {}
             for dst, parts in discovered.items():
                 new = parts[0]
                 for p in parts[1:]:
                     new = new.union(p)
-                new = new.distinct()
-                if rounds % self.checkpoint_every == 0:
-                    # localCheckpoint truncates the iterative lineage AND
-                    # caches — no extra persist on those rounds
-                    new = new.localCheckpoint(eager=False)
-                else:
-                    new = new.persist(StorageLevel.MEMORY_AND_DISK)
+                new = new.distinct().localCheckpoint(eager=False)
                 persisted.append(new)
                 candidates[dst] = new
 
@@ -620,7 +601,6 @@ class Subsetter:
                 for dst, new in candidates.items():
                     n = sizes.get(dst, 0)
                     if n == 0:
-                        new.unpersist()
                         continue
                     next_frontier[dst] = new
                     next_size[dst] = n
@@ -632,16 +612,9 @@ class Subsetter:
                     # whole visited table every round
                     merged = prev.union(new_keys) if prev is not None else new_keys
                     vsize[dst] = vsize.get(dst, 0) + n
-                    if rounds % self.checkpoint_every == 0:
-                        merged = merged.localCheckpoint(eager=False)
-                    else:
-                        merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
-                        persisted.append(merged)
-                    visited[dst] = merged
+                    visited[dst] = merged.localCheckpoint(eager=False)
+                    persisted.append(visited[dst])
 
-            # telemetry: distributed 'new' counts (key, blocked-tag) rows
-            # (what the round actually shuffles); driver rounds count
-            # distinct keys — the 'mode' field disambiguates the units
             history.append(
                 {
                     "round": rounds,
@@ -651,8 +624,6 @@ class Subsetter:
                 }
             )
             for df in src_rows.values():
-                df.unpersist()
-            for df in frontier.values():
                 df.unpersist()
             frontier, fsize = next_frontier, next_size
 
@@ -666,7 +637,7 @@ class Subsetter:
         # intermediates are released only after the finals are solid.
         row_counts = _tagged_counts(final)
         for df in persisted:
-            df.unpersist()
+            _release(df)
         return SubsetResult(keys=final, rounds=rounds, row_counts=row_counts, history=history)
 
     # ---------------------------------------------------------------- export

@@ -91,7 +91,7 @@ def parent_child(spark):
 
 def test_include_schema_roundtrip_into_empty_db(spark, parent_child, tmp_path):
     schema = _parent_child_schema()
-    eng = Subsetter(spark, parent_child, schema, checkpoint_every=100)
+    eng = Subsetter(spark, parent_child, schema)
     res = eng.run([Root("public.parent", "id = 1")])
     tables = eng.export(res)
 
@@ -143,7 +143,7 @@ def test_restore_sequence_roundtrip(spark, parent_child, tmp_path):
     )
 
     schema = _parent_child_schema()
-    eng = Subsetter(spark, parent_child, schema, checkpoint_every=100)
+    eng = Subsetter(spark, parent_child, schema)
     tables = eng.export(eng.run([Root("public.parent", "id >= 1")]))
 
     seqs = capture_sequences(tables, schema)

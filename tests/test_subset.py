@@ -8,8 +8,8 @@ an independent formulation of the same semantics (reference fixture model:
 
 from __future__ import annotations
 
-from slice_db_spark.config.model import Root
-from slice_db_spark.plans.subset import Subsetter
+from slice_db_spark.config.model import Reference, Root, SchemaConfig, Table
+from slice_db_spark.plans.subset import DRIVER_ROWS, Subsetter
 from slice_db_spark.plans.tpch import KEY_EXPRS, tpch_schema
 
 from conftest import ddb_set, rows_set
@@ -57,7 +57,7 @@ SELECT t1 AS tbl, k1 AS key FROM closure
 def run_subset(spark, catalog, roots):
     schema = tpch_schema()
     cat = {t: catalog[t] for t in schema.tables}
-    eng = Subsetter(spark, cat, schema, checkpoint_every=100)
+    eng = Subsetter(spark, cat, schema)
     res = eng.run(roots)
     return eng, res
 
@@ -135,8 +135,11 @@ def test_empty_root(spark, catalog):
 
 def test_regimes_agree(spark, catalog, ddb):
     """Driver regime, mid-flight spill, and pure distributed produce the
-    identical closure (the spill lifts completed driver state into
-    DataFrames and the distributed loop redoes the overflowing round)."""
+    identical closure.  A spill lifts the driver state into DataFrames
+    after the overflowing round and the distributed loop continues from
+    the next round; only when a job of that round hit its row limit (its
+    rows are truncated) is the round-start state lifted and the round
+    redone distributed."""
     schema = tpch_schema()
     cat = {t: catalog[t] for t in schema.tables}
     roots = [Root("customer", "c_custkey <= 3")]
@@ -146,17 +149,122 @@ def test_regimes_agree(spark, catalog, ddb):
             "SELECT 'customer' t1, CAST(c_custkey AS BIGINT) k1 FROM customer WHERE c_custkey <= 3"
         ),
     )
+    # budget -> driver rounds before the first distributed one.  At 130 no
+    # job of round 2 exceeds the budget but their sum does: round 2 is kept
+    # and the distributed rounds start at round 3.  At 40 a round-2 job hits
+    # its row limit, so round 2 is redone distributed.
+    spill_after = {130: 2, 40: 1}
     seen_modes = set()
-    for driver_rows in (200_000, 40, 0):
-        eng = Subsetter(spark, cat, schema, checkpoint_every=100, driver_rows=driver_rows)
+    for driver_rows in (200_000, 130, 40, 0):
+        eng = Subsetter(spark, cat, schema, driver_rows=driver_rows)
         res = eng.run(roots)
         got = rows_set(eng.closure_keys(res, KEY_EXPRS))
         assert got == want, f"driver_rows={driver_rows}"
-        seen_modes.add(tuple(h.get("mode", "dist") for h in res.history))
+        modes = tuple(h.get("mode", "dist") for h in res.history)
+        seen_modes.add(modes)
+        if driver_rows in spill_after:
+            k = spill_after[driver_rows]
+            assert modes[:k] == ("driver",) * k, (driver_rows, modes)
+            assert set(modes[k:]) == {"dist"}, (driver_rows, modes)
     # all three regimes actually exercised
     assert any(all(m == "driver" for m in ms) for ms in seen_modes)
     assert any(ms and ms[0] == "driver" and ms[-1] == "dist" for ms in seen_modes)
     assert any(all(m == "dist" for m in ms) for ms in seen_modes)
+
+
+def _emp_shift_schema() -> SchemaConfig:
+    # emp(eid string, mgr string) with a two-direction self-FK, and
+    # shift(day date, slot int) -- a composite key -- with a nullable FK to emp
+    return SchemaConfig(
+        tables={
+            "emp": Table(id="emp", name="emp", columns=["eid", "mgr"], id_columns=["eid"]),
+            "shift": Table(
+                id="shift", name="shift", columns=["day", "slot", "eid"],
+                id_columns=["day", "slot"],
+            ),
+        },
+        references={
+            "emp_mgr": Reference(
+                id="emp_mgr", table="emp", columns=["mgr"], reference_table="emp",
+                reference_columns=["eid"], directions=["forward", "reverse"],
+            ),
+            "shift_emp": Reference(
+                id="shift_emp", table="shift", columns=["eid"], reference_table="emp",
+                reference_columns=["eid"], directions=["forward", "reverse"],
+            ),
+        },
+    )
+
+
+def _sql_executions(spark):
+    """The session's SQL status store entries, oldest first, once every
+    posted event has reached the store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return spark._jsparkSession.sharedState().statusStore().executionsList()
+
+
+def _max_plan_chars(spark, after_id: int) -> tuple[int, int]:
+    """(last SQL execution id, longest physical-plan description among the
+    executions after ``after_id``)."""
+    execs = _sql_executions(spark)
+    last, longest = after_id, 0
+    for i in reversed(range(execs.size())):
+        e = execs.apply(i)
+        if e.executionId() <= after_id:
+            break
+        last = max(last, e.executionId())
+        longest = max(longest, len(e.physicalPlanDescription()))
+    return last, longest
+
+
+def test_string_date_keys_null_fks_self_reference(spark):
+    """Non-integer and composite keys, NULL FKs, a duplicate key row and a
+    self-reference with a 2-cycle give one closure in every regime, and
+    the distributed rounds keep their plans small (lineage is cut every
+    round)."""
+    import datetime
+
+    day = datetime.date
+    emp = spark.createDataFrame(
+        [("a", None), ("b", "a"), ("c", "a"), ("d", "b"), ("d", "c"),
+         ("x", "y"), ("y", "x"), ("z", None)],
+        "eid string, mgr string",
+    )
+    shift = spark.createDataFrame(
+        [(day(2024, 1, 1), 1, "b"), (day(2024, 1, 1), 2, None), (day(2024, 1, 2), 1, "x"),
+         (day(2024, 1, 2), 2, "d"), (day(2024, 1, 3), 1, "z")],
+        "day date, slot int, eid string",
+    )
+    schema = _emp_shift_schema()
+    roots = [
+        Root("emp", "eid = 'b'"),
+        Root("shift", "day = date'2024-01-02' AND slot = 1"),
+        Root("shift", "day = date'2024-01-01' AND slot = 2"),
+    ]
+    # b pulls its manager a (whose NULL manager goes nowhere) and its report
+    # d; d arrived through the reverse edge so it does not climb back to
+    # its managers b/c, but pulls its shift.  Shift (01-02, 1) pulls x,
+    # which reaches y both ways (the 2-cycle); the NULL-FK shift pulls
+    # nothing.
+    want = {
+        "emp": {("a",), ("b",), ("d",), ("x",), ("y",)},
+        "shift": {(day(2024, 1, 1), 1), (day(2024, 1, 2), 2), (day(2024, 1, 2), 1),
+                  (day(2024, 1, 1), 2)},
+    }
+    execs = _sql_executions(spark)
+    last = execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+    for driver_rows in (DRIVER_ROWS, 3, 1, 0):
+        eng = Subsetter(spark, {"emp": emp, "shift": shift}, schema, driver_rows=driver_rows)
+        res = eng.run(roots)
+        got = {t: rows_set(df) for t, df in res.keys.items()}
+        assert got == want, driver_rows
+        modes = {h["mode"] for h in res.history}
+        assert ("dist" in modes) == (driver_rows < DRIVER_ROWS), (driver_rows, modes)
+        assert res.row_counts == {t: len(k) for t, k in want.items()}, driver_rows
+        # every physical row of a visited key exports: d has two
+        assert eng.export(res)["emp"].count() == 6, driver_rows
+        last, longest = _max_plan_chars(spark, last)
+        assert longest < 1_000_000, (driver_rows, longest)
 
 
 def test_edge_plan_orders_by_stats(spark, catalog):
@@ -224,7 +332,7 @@ def test_closure_scale_invariant_under_fact_replication(spark, catalog, tmp_path
     paths = build_scaled_tpch(spark, SF_DIR, 3, str(tmp_path))
     schema = tpch_schema()
     cat = {t: spark.read.parquet(paths[t]) for t in schema.tables}
-    eng3 = Subsetter(spark, cat, schema, checkpoint_every=100)
+    eng3 = Subsetter(spark, cat, schema)
     res3 = eng3.run(roots)
     keys3 = rows_set(eng3.closure_keys(res3, KEY_EXPRS))
 
