@@ -35,6 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import release
 from .hashing import hash64
 from .text import normalize
 
@@ -559,7 +560,6 @@ def connected_components(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_rounds: int = 50,
-    checkpoint_every: int = 5,
     driver_rows: int = 1_000_000,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph: (id, rep)
@@ -570,10 +570,12 @@ def connected_components(
     Iterative min-label propagation, the standard Spark shape (one
     join + min-aggregate per round, converging in O(component diameter)
     rounds — near-dup clusters are shallow, so a handful).  Same lineage
-    hygiene as the subsetter: persist per round, ``localCheckpoint``
-    periodically, ONE count action per round for the fixed point.  Only
-    ids appearing in ``pairs`` are emitted; unpaired docs are their own
-    implicit singletons.
+    rule as the subsetter: every round's labels are a ``localCheckpoint``
+    (materialized by the round's ONE aggregate action for the fixed
+    point), so no round's plan grows with the round count, and every
+    round checkpoint is released through its RDD when the loop ends.
+    Only ids appearing in ``pairs`` are emitted; unpaired docs are their
+    own implicit singletons.
 
     Hybrid regime: pair graphs at or under ``driver_rows`` edges collect
     to the driver and run union-find — near-dup pair sets are tiny
@@ -620,22 +622,18 @@ def connected_components(
     # 2^63-bounded reps × any realistic row count stays far below 10^38.
     label_sum = F.sum(F.col("rep").cast("decimal(38,0)"))
     prev_sum = labels.agg(label_sum).first()[0]
-    for rounds in range(1, max_rounds + 1):
+    for _ in range(max_rounds):
         nbr = edges.join(labels, edges["dst"] == labels["id"]).select(
             F.col("src").alias("id"), "rep"
         )
-        new = (
+        labels = (
             labels.union(nbr)
             .groupBy("id")
             .agg(F.min("rep").alias("rep"))
+            .localCheckpoint(eager=False)
         )
-        if rounds % checkpoint_every == 0:
-            new = new.localCheckpoint(eager=False)
-        else:
-            new = new.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted.append(new)
-        cur_sum = new.agg(label_sum).first()[0]
-        labels = new
+        persisted.append(labels)
+        cur_sum = labels.agg(label_sum).first()[0]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
@@ -643,16 +641,18 @@ def connected_components(
         # diameter > max_rounds: propagation advances one hop per round, so
         # a long-path component would need O(diameter) more rounds.  Switch
         # regimes instead of raising: star contraction HALVES long paths
-        # every alternation, converging in O(log n) rounds.
-        ids = labels.select("id")
-        for df in persisted:
-            df.unpersist()
-        return _star_components(pairs, a_col, b_col, ids=ids)
+        # every alternation, converging in O(log n) rounds.  Its result is
+        # an eager checkpoint, so the rounds are released after it.
+        try:
+            return _star_components(pairs, a_col, b_col, ids=labels.select("id"))
+        finally:
+            for df in persisted:
+                release(df)
 
-    out = labels.localCheckpoint(eager=True)
-    for df in persisted:
-        df.unpersist()
-    return out
+    # the last round's checkpoint is the result; release the rest
+    for df in persisted[:-1]:
+        release(df)
+    return labels
 
 
 def _star_components(
@@ -685,9 +685,7 @@ def _star_components(
     rewrite stacks unions+joins+distincts, so without per-round plan
     truncation Catalyst's logical plan grows geometrically and analysis
     OOMs the driver around round 7 — the classic iterative-Spark trap
-    (same hygiene as the propagation loop above, which checkpoints on a
-    cadence; here every round IS the cadence because the plan fan-out per
-    alternation is ~8 nodes deep)."""
+    (the same rule as the propagation loop above)."""
     all_ids = (
         ids
         if ids is not None
@@ -745,13 +743,13 @@ def _star_components(
         )
         E2 = E2.localCheckpoint(eager=True)
         cur = checksum(E2)
-        E.unpersist()
+        release(E)
         E = E2
         if cur == prev:
             break
         prev = cur
     else:
-        E.unpersist()
+        release(E)
         raise RuntimeError(
             f"star contraction did not converge in {max_alternations} "
             "alternations — not expected for any graph (O(log n) bound); "
@@ -768,7 +766,7 @@ def _star_components(
         .select("id", F.coalesce("rep", F.col("id")).alias("rep"))
         .localCheckpoint(eager=True)
     )
-    E.unpersist()
+    release(E)
     return out
 
 

@@ -6772,6 +6772,20 @@ def video_trimmed_pairs_asym(
     )
 
 
+def video_index_rows(sigs: DataFrame) -> DataFrame:
+    """The persisted video signature index layout that
+    :func:`video_near_pairs_asym` and :func:`video_trimmed_pairs_asym`
+    read: per-frame ``(media_id, frame_idx, phash)`` signatures become
+    ``(corpus_id, frame_idx, phash, n_frames)`` rows, each carrying its
+    clip's frame count for the probes' length contracts."""
+    nfr = sigs.groupBy("media_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_frames")
+    )
+    return sigs.join(nfr, "media_id").select(
+        F.col("media_id").alias("corpus_id"), "frame_idx", "phash", "n_frames"
+    )
+
+
 def video_near_pairs_asym(
     new_sigs: DataFrame,
     corpus_index: DataFrame,

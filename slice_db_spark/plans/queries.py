@@ -18,6 +18,7 @@ Cross-engine determinism rules used throughout:
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 
@@ -35,11 +36,12 @@ from .tpch import KEY_EXPRS, tpch_schema
 
 import threading as _threading
 
-#: guards every per-sf_dir memo below — the panorama queries build their
-#: component frames from a driver thread pool (r11, guide §2.6), so a
-#: memo's check-then-build must be atomic or two threads build (and one
-#: leaks) the same persisted frame.  RLock: memo builders call catalog()
-#: (itself guarded) while holding the lock.
+#: guards every per-sf_dir memo below — registry entries run side by
+#: side from driver threads (``_concurrently`` builds panorama parts that
+#: way, and callers may run entries from their own threads), so a memo's
+#: check-then-build must be atomic or two threads build (and one leaks)
+#: the same persisted frame.  RLock: memo builders call
+#: catalog() (itself guarded) while holding the lock.
 _MEMO_LOCK = _threading.RLock()
 
 _CATALOGS: dict[str, dict[str, DataFrame]] = {}
@@ -1414,6 +1416,21 @@ def embedding_drift(spark, sf_dir):
     )
 
 
+def _concurrently(*builds):
+    """The results of the zero-argument ``builds``, in order, each run in
+    its own driver thread that keeps the caller's job group.  Only for
+    builds whose eager jobs leave cores idle when run one after another,
+    and only where an interleaved A/B showed it pays (numbers at each
+    caller)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(builds)) as pool:
+        futs = [pool.submit(inheritable_thread_target(b)) for b in builds]
+        return [f.result() for f in futs]
+
+
 #: result-row counts summarized by dedup_panorama — each name must be an
 #: oracle-gated dedup query so the panorama oracle can embed its SQL
 PANORAMA_FAMILIES = [
@@ -1430,28 +1447,21 @@ def dedup_panorama(spark, sf_dir):
     memoized pair cache); the oracle embeds each family's own oracle SQL
     verbatim, so the panorama can never drift from the operators it
     summarizes."""
-    # r11: family construction overlapped from a driver pool (guide
-    # §2.6) — several families run eager checkpoints while building, so
-    # the serial loop left the cluster idle between them.  The memo
-    # getters are lock-guarded; union order is unchanged, so the result
-    # is bit-identical.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # several families run eager checkpoints while building.  Overlapped,
+    # on 4-core local[4] (sf0.1, three rounds of 10 interleaved pairs):
+    # one after the other was slower in 25 of 30 pairs, by +1.9, +0.6
+    # and +2.8 s at the round medians (17.4-19.4 s overlapped).
     all_q = _all_queries()
-    with ThreadPoolExecutor(max_workers=len(PANORAMA_FAMILIES)) as pool:
-        futs = [
-            pool.submit(all_q[name], spark, sf_dir)
-            for name in PANORAMA_FAMILIES
-        ]
-        built = [f.result() for f in futs]
-    rows = None
-    for name, fam in zip(PANORAMA_FAMILIES, built):
-        r = fam.agg(F.count(F.lit(1)).alias("__n")).select(
+    families = _concurrently(*(
+        functools.partial(all_q[name], spark, sf_dir) for name in PANORAMA_FAMILIES
+    ))
+    return functools.reduce(DataFrame.unionByName, [
+        fam.agg(F.count(F.lit(1)).alias("__n")).select(
             F.lit(name).alias("family"),
             F.col("__n").cast("bigint").alias("n_rows"),
         )
-        rows = r if rows is None else rows.unionByName(r)
-    return rows
+        for name, fam in zip(PANORAMA_FAMILIES, families)
+    ])
 
 
 _JP05_PAIRS: dict = {}
@@ -1819,22 +1829,12 @@ def bloom_decontam(spark, sf_dir):
     no-false-negative / bounded-false-positive contract a measured
     number."""
     docs = catalog(spark, sf_dir)["documents"]
-    # r11 (guide §2.6): the corpus and benchmark shingle materializations
-    # are independent job chains over disjoint doc slices — build them
-    # from a driver pool so one side's tail backfills the other (plans
-    # and results unchanged; both frames were already eager).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        bench_fut = pool.submit(
-            lambda: dedup.shingle_table(
-                docs.where("doc_id % 97 = 0"), n=DECONTAM_N
-            ).select("shingle").distinct().localCheckpoint(eager=True)
-        )
-        corpus_st = dedup.shingle_table(
-            docs.where("doc_id % 97 != 0"), n=DECONTAM_N
-        ).localCheckpoint(eager=True)  # three consumers: sizes, bloom probe, exact join
-        bench_sh = bench_fut.result()  # bits + exact join
+    bench_sh = dedup.shingle_table(
+        docs.where("doc_id % 97 = 0"), n=DECONTAM_N
+    ).select("shingle").distinct().localCheckpoint(eager=True)  # bits + exact join
+    corpus_st = dedup.shingle_table(
+        docs.where("doc_id % 97 != 0"), n=DECONTAM_N
+    ).localCheckpoint(eager=True)  # three consumers: sizes, bloom probe, exact join
     bits = sketches.bloom_bits(bench_sh, "shingle")
     n_bloom = (
         sketches.bloom_candidates(corpus_st, "shingle", bits)
@@ -2093,8 +2093,6 @@ def customer_abc(spark, sf_dir):
     bounds = per.selectExpr("CAST(__cents AS DOUBLE) AS __k").approxQuantile(
         "__k", [i / n_parts for i in range(1, n_parts)], 0.01
     )
-    import functools
-
     bucket = functools.reduce(
         lambda acc, b: acc + F.when(F.col("__cents") < F.lit(b), 1).otherwise(0),
         sorted({b for b in bounds if b == b}),
@@ -2352,17 +2350,14 @@ def sketch_hll_union(spark, sf_dir):
     o = catalog(spark, sf_dir)["orders"]
     a = o.where(f"o_orderdate < {HLL_SPLIT_TS}")
     b = o.where(f"o_orderdate >= {HLL_SPLIT_TS}")
-    # r11 (guide §2.6): the two half-corpus register materializations are
-    # independent job chains — overlap them from a driver thread (plans
-    # and results unchanged; both were already eager).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        rb_fut = pool.submit(
-            lambda: sketches.hll_registers(b, "o_custkey").localCheckpoint(eager=True)
-        )
-        ra = sketches.hll_registers(a, "o_custkey").localCheckpoint(eager=True)
-        rb = rb_fut.result()
+    # the two half-corpus register builds are one-task scans of the
+    # single-row-group orders fixture.  Overlapped, on 4-core local[4]
+    # (sf0.1, 10 interleaved pairs): 1.68 s median, 2.12 s one after the
+    # other, slower in 10 of 10 pairs.
+    ra, rb = _concurrently(
+        lambda: sketches.hll_registers(a, "o_custkey").localCheckpoint(eager=True),
+        lambda: sketches.hll_registers(b, "o_custkey").localCheckpoint(eager=True),
+    )
     # tagged union + one-row conditional aggregate (a literal-key join of
     # single-row frames constant-folds into a nested loop — harmless at
     # one row, but the plan lint rightly has no way to know that)
@@ -4731,50 +4726,18 @@ def media_anim_incremental(spark, sf_dir):
     `ingest_media_stream(fingerprint="anim-video")`: a GIF indexed
     yesterday rejects its APNG re-encode arriving today.  The oracle is
     the cross-format hash chain with a batch-vs-corpus split readout."""
-    import shutil
-    import tempfile
-
-    docs = catalog(spark, sf_dir)["documents"]
-    tmp = tempfile.mkdtemp(prefix="anim_idx_q_")
-    idx = os.path.join(tmp, "idx")
-
-    # corpus/batch split BELOW the opaque synth: `synth_apng_gif_pairs`
-    # emits exactly one row per input id with media_id == doc_id, so
-    # filtering doc_id before the synth is row-identical to filtering
-    # media_id after — and Spark cannot push a filter through
+    # the corpus/batch split runs BELOW the opaque synth:
+    # `synth_apng_gif_pairs` emits exactly one row per input id with
+    # media_id == doc_id, so filtering doc_id first is row-identical to
+    # filtering media_id after — and Spark cannot push a filter through
     # mapInPandas, so the post-synth form encoded the FULL corpus in
     # BOTH branches (2× the Python GIF/APNG encode work).
-    def media_split(pred):
-        return multimodal.synth_apng_gif_pairs(docs.where(pred))
-
-    try:
-        # r11: probe materialization overlapped with the corpus index
-        # build (guide §2.6) — see media_video_incremental
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            probe_fut = pool.submit(
-                lambda: multimodal.anim_video_phash(
-                    media_split(F.col("doc_id") % 10 >= 8)
-                ).localCheckpoint(eager=True)
-            )
-            csigs = multimodal.anim_video_phash(
-                media_split(F.col("doc_id") % 10 < 8)
-            ).localCheckpoint(eager=True)
-            nfr = csigs.groupBy("media_id").agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_frames")
-            )
-            csigs.join(nfr, "media_id").select(
-                F.col("media_id").alias("corpus_id"), "frame_idx", "phash",
-                "n_frames",
-            ).write.mode("overwrite").parquet(idx)
-            probe = probe_fut.result()
-        return multimodal.video_near_pairs_asym(
-            probe, spark.read.parquet(idx),
-            bits=63, bands=PHASH_BANDS, max_hamming=PHASH_MAX_HAMMING,
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _video_incremental(
+        spark, sf_dir,
+        lambda d: multimodal.anim_video_phash(multimodal.synth_apng_gif_pairs(d)),
+        F.col("doc_id") % 10 >= 8,
+        _video_near_pairs_asym,
+    )
 
 
 def media_video_pairs(spark, sf_dir):
@@ -4920,6 +4883,19 @@ def media_phash_incolumn_imageio(spark, sf_dir):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _lane_report(label, names, lanes):
+    """One row per lane, in order: the lane's name in column ``label``,
+    its pair count and the items a min-id-wins pass would drop (distinct
+    ``id_b`` of the pair frame)."""
+    return functools.reduce(DataFrame.unionByName, [
+        pairs.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+            F.countDistinct("id_b").cast("bigint").alias("n_dup_items"),
+        ).select(F.lit(name).alias(label), "n_pairs", "n_dup_items")
+        for name, pairs in zip(names, lanes)
+    ])
+
+
 def media_dedup_panorama(spark, sf_dir):
     """One MEDIA dedup report across all three perceptual modalities —
     the multimodal analog of `dedup_panorama`: per modality, the
@@ -4928,29 +4904,10 @@ def media_dedup_panorama(spark, sf_dir):
     the exact pair queries (`media_phash_pairs`/`media_audio_pairs`/
     `media_video_pairs`); the oracle embeds their oracle SQL verbatim as
     subqueries, so the panorama can never drift from its components."""
-    def summarize(pairs, modality):
-        return pairs.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-            F.countDistinct("id_b").cast("bigint").alias("n_dup_items"),
-        ).select(F.lit(modality).alias("modality"), "n_pairs", "n_dup_items")
-
-    # r11: overlap the three independent lanes' eager-checkpoint job
-    # chains (guide §2.6) — same plans, same union order, bit-identical
-    # result
-    from concurrent.futures import ThreadPoolExecutor
-
-    lanes = [
-        ("image", media_phash_pairs),
-        ("audio", media_audio_pairs),
-        ("video", media_video_pairs),
-    ]
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [pool.submit(fn, spark, sf_dir) for _, fn in lanes]
-        built = [f.result() for f in futs]
-    out = summarize(built[0], lanes[0][0])
-    for (modality, _), pairs in zip(lanes[1:], built[1:]):
-        out = out.unionByName(summarize(pairs, modality))
-    return out
+    return _lane_report("modality", ["image", "audio", "video"], [
+        fn(spark, sf_dir)
+        for fn in (media_phash_pairs, media_audio_pairs, media_video_pairs)
+    ])
 
 
 def media_robust_panorama(spark, sf_dir):
@@ -4968,38 +4925,55 @@ def media_robust_panorama(spark, sf_dir):
     min-id-wins pass would drop.  The oracle embeds each lane's oracle
     SQL verbatim as a subquery (the dedup_panorama drift-proof
     composition pattern)."""
-    def summarize(pairs, lane):
-        return pairs.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-            F.countDistinct("id_b").cast("bigint").alias("n_dup_items"),
-        ).select(F.lit(lane).alias("lane"), "n_pairs", "n_dup_items")
+    lanes = {
+        "image_oriented": media_phash_oriented,
+        "image_dihedral": media_phash_dihedral,
+        "audio_offset": media_audio_offset_pairs,
+        "audio_resampled": media_audio_resampled_pairs,
+        "video_trimmed": media_video_trimmed_pairs,
+        "video_shot_reuse": media_shot_reuse,
+        "gif_browser_flatten": media_gif_disposal2_pairs,
+        "anim_cross_format": media_apng_gif_pairs,
+    }
+    # each lane's build runs its own chain of eager synth/decode/
+    # fingerprint checkpoints.  Overlapped, on 4-core local[4] (sf0.1, 10
+    # interleaved pairs): 39.4 s median, 42.4 s one after the other,
+    # slower in 9 of 10 pairs.
+    return _lane_report("lane", list(lanes), _concurrently(*(
+        functools.partial(fn, spark, sf_dir) for fn in lanes.values()
+    )))
 
-    # r11 (guide §2.6 "overlap independent jobs"): each lane's
-    # construction runs its own EAGER localCheckpoints (the synth→decode
-    # →fingerprint materializations), so building the eight lanes
-    # sequentially serialized eight independent job chains — one lane's
-    # straggler tail left the rest of the cluster idle.  A small driver
-    # pool overlaps them; each lane's plan (and the union order below)
-    # is unchanged, so the result is bit-identical.
-    lanes = [
-        ("image_oriented", media_phash_oriented),
-        ("image_dihedral", media_phash_dihedral),
-        ("audio_offset", media_audio_offset_pairs),
-        ("audio_resampled", media_audio_resampled_pairs),
-        ("video_trimmed", media_video_trimmed_pairs),
-        ("video_shot_reuse", media_shot_reuse),
-        ("gif_browser_flatten", media_gif_disposal2_pairs),
-        ("anim_cross_format", media_apng_gif_pairs),
-    ]
-    from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        futs = [pool.submit(fn, spark, sf_dir) for _, fn in lanes]
-        built = [f.result() for f in futs]
-    out = summarize(built[0], lanes[0][0])
-    for (lane, _), pairs in zip(lanes[1:], built[1:]):
-        out = out.unionByName(summarize(pairs, lane))
-    return out
+def _video_near_pairs_asym(probe, index):
+    return multimodal.video_near_pairs_asym(
+        probe, index, bits=63, bands=PHASH_BANDS, max_hamming=PHASH_MAX_HAMMING
+    )
+
+
+def _video_incremental(spark, sf_dir, sigs, batch_pred, probe):
+    """The continuous video-dedup sequence the incremental entries share:
+    the standing corpus (documents failing ``batch_pred``) writes its
+    per-frame signature index (``sigs`` of the documents, in
+    `multimodal.video_index_rows` layout) to a temp dir, the arriving
+    batch's signatures ``probe(batch_sigs, index)`` it, and the result is
+    checkpointed before the temp dir is deleted.  Both signature frames
+    are eager checkpoints: each feeds several joins (the frame-count
+    aggregate; the banding/candidate/verify branches of the probe) and
+    would otherwise recompute the Python synth+decode+DCT pipeline per
+    consumer."""
+    import shutil
+    import tempfile
+
+    docs = catalog(spark, sf_dir)["documents"]
+    tmp = tempfile.mkdtemp(prefix="video_idx_q_")
+    idx = os.path.join(tmp, "idx")
+    try:
+        csigs = sigs(docs.where(~batch_pred)).localCheckpoint(eager=True)
+        multimodal.video_index_rows(csigs).write.mode("overwrite").parquet(idx)
+        bsigs = sigs(docs.where(batch_pred)).localCheckpoint(eager=True)
+        return probe(bsigs, spark.read.parquet(idx)).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def media_video_incremental(spark, sf_dir):
@@ -5012,47 +4986,12 @@ def media_video_incremental(spark, sf_dir):
     "video")`, so continuous video ingest sits under the same oracle as
     the batch pairing.  Result checkpointed before the temp index dir is
     deleted."""
-    import shutil
-    import tempfile
-
-    docs = catalog(spark, sf_dir)["documents"]
-    batch = docs.where(F.col("doc_id") % 5 == 0)
-    corpus = docs.where(F.col("doc_id") % 5 != 0)
-    tmp = tempfile.mkdtemp(prefix="vfp_idx_q_")
-    idx = os.path.join(tmp, "idx")
-    try:
-        # eager checkpoints: both signature frames feed multiple joins
-        # (nfr self-aggregate; banding/candidate/verify branches in the
-        # asym probe) and would otherwise recompute the Python
-        # synth+decode+DCT pipeline per consumer.  r11: the probe
-        # side's materialization is independent of the corpus index
-        # build, so it runs in a driver thread while the index writes
-        # (guide §2.6) — plans and results unchanged.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            probe_fut = pool.submit(
-                lambda: multimodal.video_phash(
-                    multimodal.synth_texture_y4m(batch)
-                ).localCheckpoint(eager=True)
-            )
-            csigs = multimodal.video_phash(
-                multimodal.synth_texture_y4m(corpus)
-            ).localCheckpoint(eager=True)
-            nfr = csigs.groupBy("media_id").agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_frames")
-            )
-            csigs.join(nfr, "media_id").select(
-                F.col("media_id").alias("corpus_id"), "frame_idx", "phash",
-                "n_frames",
-            ).write.mode("overwrite").parquet(idx)
-            probe = probe_fut.result()
-        return multimodal.video_near_pairs_asym(
-            probe, spark.read.parquet(idx),
-            bits=63, bands=PHASH_BANDS, max_hamming=PHASH_MAX_HAMMING,
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _video_incremental(
+        spark, sf_dir,
+        lambda d: multimodal.video_phash(multimodal.synth_texture_y4m(d)),
+        F.col("doc_id") % 5 == 0,
+        _video_near_pairs_asym,
+    )
 
 
 #: audio fingerprint pairing knobs: 30 delta bits (31 windows), 6 bands
@@ -5163,43 +5102,16 @@ def media_video_trimmed_incremental(spark, sf_dir):
     equal-length contract at offset 0 (the probe a sink swaps in to
     widen its match contract).  Result checkpointed before the temp
     index dir is deleted."""
-    import shutil
-    import tempfile
-
-    docs = catalog(spark, sf_dir)["documents"]
-    batch = docs.where(F.col("doc_id") % 5 == 0)
-    corpus = docs.where(F.col("doc_id") % 5 != 0)
-    tmp = tempfile.mkdtemp(prefix="vtp_idx_q_")
-    idx = os.path.join(tmp, "idx")
-    try:
-        # r11: probe materialization overlapped with the corpus index
-        # build (guide §2.6) — see media_video_incremental
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            probe_fut = pool.submit(
-                lambda: multimodal.video_phash(
-                    multimodal.synth_texture_y4m_trim(batch)
-                ).localCheckpoint(eager=True)
-            )
-            csigs = multimodal.video_phash(
-                multimodal.synth_texture_y4m_trim(corpus)
-            ).localCheckpoint(eager=True)
-            nfr = csigs.groupBy("media_id").agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_frames")
-            )
-            csigs.join(nfr, "media_id").select(
-                F.col("media_id").alias("corpus_id"), "frame_idx", "phash",
-                "n_frames",
-            ).write.mode("overwrite").parquet(idx)
-            probe = probe_fut.result()
-        return multimodal.video_trimmed_pairs_asym(
-            probe, spark.read.parquet(idx),
+    return _video_incremental(
+        spark, sf_dir,
+        lambda d: multimodal.video_phash(multimodal.synth_texture_y4m_trim(d)),
+        F.col("doc_id") % 5 == 0,
+        lambda probe, index: multimodal.video_trimmed_pairs_asym(
+            probe, index,
             bits=63, bands=PHASH_BANDS, max_hamming=PHASH_MAX_HAMMING,
             max_trim=VIDEO_TRIM_MAX, min_overlap=VIDEO_TRIM_MIN_OVERLAP,
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        ),
+    )
 
 
 def media_jpeg_progressive(spark, sf_dir):

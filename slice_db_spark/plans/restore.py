@@ -51,6 +51,7 @@ def _run_levels(levels: list[list[str]], jobs: int, write) -> list[str]:
                 write(t)
                 done.append(t)
         return done
+    # the user-set `restore --jobs` pool (slice_db/cli/main.py:165-171)
     with ThreadPoolExecutor(max_workers=jobs) as pool:
         for level in levels:
             futures = {t: pool.submit(write, t) for t in level}

@@ -60,6 +60,15 @@ def get_spark(app_name: str = "slice_db_spark", cpus: int | None = None) -> Spar
     return spark
 
 
+def release(df) -> None:
+    """Drop the blocks of a persisted or locally checkpointed DataFrame
+    (``unpersist()`` does not reach a checkpoint's RDD)."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 def load_catalog(spark: SparkSession, sf_dir: str, tables=TABLES):
     """Load the test star schema as a dict of DataFrames.
 
@@ -106,6 +115,8 @@ def load_catalog(spark: SparkSession, sf_dir: str, tables=TABLES):
             df = df.repartition(parallelism)
         return t, df
 
+    # pays on 4-core local[4]: a cold sf0.1 catalog opens in 0.25-0.34 s,
+    # 0.43-0.47 s serially
     with ThreadPoolExecutor(max_workers=min(8, max(1, len(present)))) as ex:
         return dict(ex.map(load, present))
 

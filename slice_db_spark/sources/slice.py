@@ -215,6 +215,7 @@ def write_slice(
     if jobs > 1 and len(tables) > 1:
         from concurrent.futures import ThreadPoolExecutor
 
+        # the user-set `dump --jobs` pool (slice_db/cli/main.py:108-114)
         with ThreadPoolExecutor(max_workers=jobs) as ex:
             metas = list(ex.map(write_table, tables))
     else:
@@ -311,6 +312,7 @@ def write_slice_zip(
         if jobs > 1 and len(tables) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
+            # the user-set `dump --jobs` pool (slice_db/cli/main.py:108-114)
             with ThreadPoolExecutor(max_workers=jobs) as ex:
                 staged = dict(zip(tables, ex.map(stage, tables)))
         else:

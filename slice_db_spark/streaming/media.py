@@ -620,15 +620,7 @@ def ingest_media_stream(
                 index_lease.check()  # fenced: never append on a lost lease
                 idx_rows = sigs.join(near, "media_id", "left_anti")
                 if fingerprint in ("video", "gif-video", "anim-video"):
-                    # video index rows carry frame alignment + the frame
-                    # count the asym probe's equal-length contract needs
-                    nfr = idx_rows.groupBy("media_id").agg(
-                        F.count(F.lit(1)).cast("bigint").alias("n_frames")
-                    )
-                    idx_rows = idx_rows.join(nfr, "media_id").select(
-                        F.col("media_id").alias("corpus_id"),
-                        "frame_idx", "phash", "n_frames",
-                    )
+                    idx_rows = _mm.video_index_rows(idx_rows)
                 else:
                     idx_rows = idx_rows.select(
                         F.col("media_id").alias("corpus_id"), "phash"

@@ -52,3 +52,30 @@ def rows_set(df):
 
 def ddb_set(con, sql):
     return {tuple(r) for r in con.sql(sql).fetchall()}
+
+
+def _sql_executions(spark):
+    """The session's SQL status store entries, oldest first, once every
+    posted event has reached the store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return spark._jsparkSession.sharedState().statusStore().executionsList()
+
+
+def last_execution_id(spark) -> int:
+    """Id of the session's latest SQL execution (-1 before the first)."""
+    execs = _sql_executions(spark)
+    return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+
+
+def max_plan_chars(spark, after_id: int) -> tuple[int, int]:
+    """(last SQL execution id, longest physical-plan description among the
+    executions after ``after_id``)."""
+    execs = _sql_executions(spark)
+    last, longest = after_id, 0
+    for i in reversed(range(execs.size())):
+        e = execs.apply(i)
+        if e.executionId() <= after_id:
+            break
+        last = max(last, e.executionId())
+        longest = max(longest, len(e.physicalPlanDescription()))
+    return last, longest

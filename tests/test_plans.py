@@ -458,8 +458,10 @@ def _unguarded_memo_writes(src: str) -> list[str]:
 
 
 def test_memo_writes_hold_memo_lock():
-    """Queries run side by side from driver thread pools: every write to
-    a module-level memo in plans/queries.py must hold ``_MEMO_LOCK``."""
+    """Registry entries run side by side from driver threads (the
+    panoramas' ``_concurrently`` builds, callers' own threads): every
+    write to a module-level memo in plans/queries.py must hold
+    ``_MEMO_LOCK``."""
     with open(os.path.join(_PKG, "plans", "queries.py")) as f:
         src = f.read()
     memos = _module_memos(ast.parse(src))
@@ -524,3 +526,81 @@ def test_multimodal_map_in_pandas_only_in_map_rows():
 
     visit(tree, "")
     assert [owner for owner, _ in sites] == ["_map_rows"], sites
+
+
+#: the only functions that may construct a ThreadPoolExecutor: the
+#: user-set ``--jobs`` pools of dump and restore (the reference's one
+#: kind of driver concurrency) and the driver pools measured to pay on a
+#: 4-core host (numbers at each site; ``_concurrently`` serves
+#: ``sketch_hll_union`` and the dedup and robust-media panoramas)
+_POOL_OWNERS = [
+    "Subsetter._run_driver", "_concurrently", "_run_levels", "load_catalog",
+    "write_slice", "write_slice_zip",
+]
+
+
+def _pool_owners(src: str) -> list[str]:
+    """The owner of every ``ThreadPoolExecutor(...)`` call in ``src``: the
+    top-level function (``Class.method`` for a method) that lexically
+    encloses it, ``""`` at module or class level.  A nested function
+    counts as its enclosing function."""
+    owners: list[str] = []
+
+    def visit(node, owner: str, in_func: bool) -> None:
+        if not in_func and isinstance(
+            node, (ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        ):
+            in_func = not isinstance(node, ast.ClassDef)
+            owner = f"{owner}.{node.name}" if owner else node.name
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name == "ThreadPoolExecutor":
+                owners.append(owner if in_func else "")
+        for child in ast.iter_child_nodes(node):
+            visit(child, owner, in_func)
+
+    visit(ast.parse(src), "", False)
+    return owners
+
+
+def test_thread_pools_only_in_allowlist():
+    """A driver thread pool is a speed mechanism; it stays only where a
+    measurement on a 4-core host shows it pays or the user sets ``--jobs``.
+    Jobs submitted from pool threads also lose the caller's job group."""
+    owners = []
+    for root, _, files in os.walk(_PKG):
+        for fn in files:
+            if fn.endswith(".py"):
+                with open(os.path.join(root, fn)) as f:
+                    owners += _pool_owners(f.read())
+    assert sorted(owners) == _POOL_OWNERS, owners
+
+
+def test_pool_lint_catches_planted_constructions():
+    planted = '''
+import concurrent.futures
+from concurrent.futures import ThreadPoolExecutor
+
+POOL = ThreadPoolExecutor(2)
+
+def load_catalog():
+    with ThreadPoolExecutor(4) as ex:
+        pass
+
+def panorama():
+    def build():
+        return concurrent.futures.ThreadPoolExecutor(max_workers=3)
+    return build
+
+class Subsetter:
+    pool = ThreadPoolExecutor(1)
+
+    def _run_driver(self):
+        def collect():
+            with ThreadPoolExecutor(16) as ex:
+                pass
+'''
+    assert _pool_owners(planted) == [
+        "", "load_catalog", "panorama", "", "Subsetter._run_driver",
+    ]

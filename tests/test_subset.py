@@ -12,7 +12,7 @@ from slice_db_spark.config.model import Reference, Root, SchemaConfig, Table
 from slice_db_spark.plans.subset import DRIVER_ROWS, Subsetter
 from slice_db_spark.plans.tpch import KEY_EXPRS, tpch_schema
 
-from conftest import ddb_set, rows_set
+from conftest import ddb_set, last_execution_id, max_plan_chars, rows_set
 
 # Directed edges of tpch_schema(reverse_fanout=True) as (src tbl, dst tbl)
 # pairs over single-bigint surrogate keys; a src frontier row discovers dst
@@ -196,27 +196,6 @@ def _emp_shift_schema() -> SchemaConfig:
     )
 
 
-def _sql_executions(spark):
-    """The session's SQL status store entries, oldest first, once every
-    posted event has reached the store."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return spark._jsparkSession.sharedState().statusStore().executionsList()
-
-
-def _max_plan_chars(spark, after_id: int) -> tuple[int, int]:
-    """(last SQL execution id, longest physical-plan description among the
-    executions after ``after_id``)."""
-    execs = _sql_executions(spark)
-    last, longest = after_id, 0
-    for i in reversed(range(execs.size())):
-        e = execs.apply(i)
-        if e.executionId() <= after_id:
-            break
-        last = max(last, e.executionId())
-        longest = max(longest, len(e.physicalPlanDescription()))
-    return last, longest
-
-
 def test_string_date_keys_null_fks_self_reference(spark):
     """Non-integer and composite keys, NULL FKs, a duplicate key row and a
     self-reference with a 2-cycle give one closure in every regime, and
@@ -251,8 +230,7 @@ def test_string_date_keys_null_fks_self_reference(spark):
         "shift": {(day(2024, 1, 1), 1), (day(2024, 1, 2), 2), (day(2024, 1, 2), 1),
                   (day(2024, 1, 1), 2)},
     }
-    execs = _sql_executions(spark)
-    last = execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+    last = last_execution_id(spark)
     for driver_rows in (DRIVER_ROWS, 3, 1, 0):
         eng = Subsetter(spark, {"emp": emp, "shift": shift}, schema, driver_rows=driver_rows)
         res = eng.run(roots)
@@ -263,7 +241,7 @@ def test_string_date_keys_null_fks_self_reference(spark):
         assert res.row_counts == {t: len(k) for t, k in want.items()}, driver_rows
         # every physical row of a visited key exports: d has two
         assert eng.export(res)["emp"].count() == 6, driver_rows
-        last, longest = _max_plan_chars(spark, last)
+        last, longest = max_plan_chars(spark, last)
         assert longest < 1_000_000, (driver_rows, longest)
 
 
