@@ -1416,9 +1416,9 @@ def embedding_drift(spark, sf_dir):
     )
 
 
-def _concurrently(*builds):
+def _concurrently(spark, *builds):
     """The results of the zero-argument ``builds``, in order, each run in
-    its own driver thread that keeps the caller's job group.  Only for
+    its own driver thread that keeps the caller's job group and tags.  Only for
     builds whose eager jobs leave cores idle when run one after another,
     and only where an interleaved A/B showed it pays (numbers at each
     caller)."""
@@ -1427,7 +1427,7 @@ def _concurrently(*builds):
     from pyspark import inheritable_thread_target
 
     with ThreadPoolExecutor(max_workers=len(builds)) as pool:
-        futs = [pool.submit(inheritable_thread_target(b)) for b in builds]
+        futs = [pool.submit(inheritable_thread_target(spark)(b)) for b in builds]
         return [f.result() for f in futs]
 
 
@@ -1452,7 +1452,7 @@ def dedup_panorama(spark, sf_dir):
     # one after the other was slower in 25 of 30 pairs, by +1.9, +0.6
     # and +2.8 s at the round medians (17.4-19.4 s overlapped).
     all_q = _all_queries()
-    families = _concurrently(*(
+    families = _concurrently(spark, *(
         functools.partial(all_q[name], spark, sf_dir) for name in PANORAMA_FAMILIES
     ))
     return functools.reduce(DataFrame.unionByName, [
@@ -2355,6 +2355,7 @@ def sketch_hll_union(spark, sf_dir):
     # (sf0.1, 10 interleaved pairs): 1.68 s median, 2.12 s one after the
     # other, slower in 10 of 10 pairs.
     ra, rb = _concurrently(
+        spark,
         lambda: sketches.hll_registers(a, "o_custkey").localCheckpoint(eager=True),
         lambda: sketches.hll_registers(b, "o_custkey").localCheckpoint(eager=True),
     )
@@ -4939,7 +4940,7 @@ def media_robust_panorama(spark, sf_dir):
     # fingerprint checkpoints.  Overlapped, on 4-core local[4] (sf0.1, 10
     # interleaved pairs): 39.4 s median, 42.4 s one after the other,
     # slower in 9 of 10 pairs.
-    return _lane_report("lane", list(lanes), _concurrently(*(
+    return _lane_report("lane", list(lanes), _concurrently(spark, *(
         functools.partial(fn, spark, sf_dir) for fn in lanes.values()
     )))
 
