@@ -6,9 +6,9 @@ star schema).  ``queries()`` / ``oracle_sql()`` expose every implemented
 operator from SURVEY.md §2 plus the LLM-pipeline extensions; oracles are
 DuckDB SQL computing identical results (see
 ``slice_db_spark/plans/queries.py`` for the cross-engine determinism
-rules).  As of round 5 EVERY registry entry carries an oracle — the
-RNG/FPE scrub is gated structurally (its invariants, predicted all-true,
-are the compared frame) — so the rows-only path is unused.
+rules).  Every registry entry carries an oracle — the RNG/FPE scrub is
+gated structurally (its invariants, predicted all-true, are the compared
+frame).
 """
 
 from __future__ import annotations

@@ -1532,13 +1532,12 @@ def cmd_schema_infer(args) -> int:
 
 
 def cmd_queries(args) -> int:
-    """List the registered analytic queries (the driver-contract registry)
-    with a marker for entries carrying a cross-engine SQL oracle."""
+    """List the registered analytic queries (the driver-contract registry);
+    every entry carries a cross-engine SQL oracle."""
     from .plans import queries as Q
 
-    oracles = set(Q.oracle_sql())
     for name in Q.queries():
-        print(f"{name}\t{'oracle' if name in oracles else 'rows-only'}")
+        print(f"{name}\toracle")
     return 0
 
 

@@ -29,6 +29,17 @@ TABLES = (
 )
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` unless ``SPARK_GRAFT_DRIVER_MEM`` is set: half
+    the host's physical memory, between 1g and 16g.  A fixed 16g let three
+    default sessions on a 15 GB host page it until one JVM died."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf: keep the old default
+        return "16g"
+    return f"{min(max(phys // 2 >> 20, 1024), 16384)}m"
+
+
 def get_spark(app_name: str = "slice_db_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
@@ -41,7 +52,7 @@ def get_spark(app_name: str = "slice_db_spark", cpus: int | None = None) -> Spar
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         # managed-table warehouse for bucketed layouts (plans/scale.py);
         # static conf, so it must be set before session creation

@@ -98,3 +98,20 @@ def test_topo_levels_cycle_raises():
     }
     with pytest.raises(CycleError):
         topo_levels(SchemaConfig.from_dict(d))
+
+
+def test_default_driver_memory_is_half_the_host_capped(monkeypatch):
+    """spark.driver.memory defaults to half the physical memory, between
+    1g and 16g, read from sysconf (no JVM is started)."""
+    from slice_db_spark import session
+
+    def host(gib):
+        conf = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * 2**30 // 4096}
+        monkeypatch.setattr(session.os, "sysconf", conf.__getitem__)
+
+    host(15)
+    assert session.default_driver_memory() == "7680m"
+    host(64)
+    assert session.default_driver_memory() == "16384m"
+    host(1)
+    assert session.default_driver_memory() == "1024m"

@@ -2,7 +2,7 @@
 count, task count, and shuffle volume per declared query, via a job group
 per query and the status tracker REST-free API.
 
-Usage: python tools/profile_queries.py [query ...]   (default: all HEADLINE)
+Usage: python tools/profile_queries.py [query ...]   (default: the headline entries)
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as in bench.py.
 Writes JSON to $SPARK_GRAFT_PROFILE_OUT (default /tmp/profile_queries.json).
 """
@@ -13,8 +13,6 @@ import json
 import os
 import sys
 import time
-
-import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -30,19 +28,9 @@ def main():
 
     import bench
 
-    names = sys.argv[1:] or bench.HEADLINE
+    names = sys.argv[1:] or Q.headline()
     qs = Q.queries()
-
-    # warmup (same as bench)
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _warm(v: pd.Series) -> pd.Series:
-        return v * 1.0
-
-    warm = spark.range(0, cpus * 100, 1, cpus).selectExpr("id", "id % 7 AS k")
-    warm.groupBy("k").count().write.format("noop").mode("overwrite").save()
-    warm.select(_warm(warm.id.cast("double"))).write.format("noop").mode("overwrite").save()
+    bench.warm_up(spark, cpus)
 
     tracker = sc.statusTracker()
     out: dict[str, dict] = {}
