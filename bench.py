@@ -27,10 +27,11 @@ from slice_db_spark.session import get_spark
 #: registry order) to reach a registry memo (traversal, pair graph, LSH
 #: pairs, OPQ rotation) fills it on its first run, and a rerun would time
 #: the cache read: single-shot reports the materialization exactly once.
-#: tests/test_entry_contract.py checks each memo's first reacher is listed.
+#: Later readers of a memo stay best-of-N, so their own work is timed like
+#: every other entry's.  tests/test_entry_contract.py checks that this set
+#: is exactly the memos' first reachers.
 SINGLE_SHOT = {
-    "closure_customers", "slice_export_lineitem", "minhash_lsh",
-    "nearest_doc", "doc_pagerank", "ann_pq_opq",
+    "closure_customers", "nearest_doc", "ann_pq_opq",
     # runs before minhash_lsh and minhash_est, and builds the LSH pairs
     # through its minhash_lsh family
     "dedup_panorama",

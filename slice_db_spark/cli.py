@@ -584,23 +584,11 @@ def cmd_compact(args) -> int:
     if args.lsh_index:
         report = compact_lsh_index(spark, args.path, target_file_bytes=args.target_bytes)
     elif args.ivf_index:
-        import os as _os
-
         from .operators.similarity import compact_ivf_index, compact_sq8_index
 
-        # the flag covers every build-index output; an SQ8 index has a
-        # codes/ dir (no cells), detected via the sidecar or the layout
-        _kind = None
-        try:
-            with open(_os.path.join(args.path, "index.json")) as f:
-                _kind = json.load(f).get("kind")
-        except (OSError, ValueError):
-            pass
-        if _kind == "sq8" or (
-            _kind is None
-            and _os.path.isdir(_os.path.join(args.path, "codes"))
-            and not _os.path.isdir(_os.path.join(args.path, "cells"))
-        ):
+        # the flag covers every ANN index; an SQ8 index keeps a codes/
+        # dir where the others keep cells/
+        if (_ann_index_kind(args.path) or (None,))[0] == "sq8":
             report = compact_sq8_index(
                 spark, args.path, target_file_bytes=args.target_bytes
             )
@@ -1007,14 +995,12 @@ def cmd_build_index(args) -> int:
         # encodes PQ codes with the persisted rotation + codebooks, so
         # probes score appended vectors bit-identically to a rebuild
         # that reused the same artifacts
-        sidecar_path = os.path.join(args.index, "index.json")
-        if not os.path.exists(sidecar_path):
-            print(f"--append needs an existing build-index output at "
-                  f"{args.index}", file=sys.stderr)
+        found = _ann_index_kind(args.index)
+        if found is None:
+            print(f"--append needs an existing ANN index at {args.index}",
+                  file=sys.stderr)
             return 2
-        with open(sidecar_path) as f:
-            sidecar = json.load(f)
-        kind = sidecar.get("kind")
+        kind, id_col, vec_col = found
         if kind == "ivf":
             append = S.append_ivf_index
         elif kind == "ivfpq":
@@ -1026,12 +1012,13 @@ def cmd_build_index(args) -> int:
             print(f"--append supports kind=ivf/ivfpq/sq8, index is {kind!r}",
                   file=sys.stderr)
             return 2
-        append(
-            spark, args.index, corpus,
-            id_col=sidecar.get("id_col", "vec_id"),
-            vec_col=sidecar.get("vec_col", "embedding"),
-        )
-        print(json.dumps({**sidecar, "appended": corpus.count(),
+        append(spark, args.index, corpus, id_col=id_col, vec_col=vec_col)
+        report = {"kind": kind, "id_col": id_col, "vec_col": vec_col}
+        sidecar_path = os.path.join(args.index, "index.json")
+        if os.path.exists(sidecar_path):
+            with open(sidecar_path) as f:
+                report = json.load(f)
+        print(json.dumps({**report, "appended": corpus.count(),
                           "index": args.index}))
         return 0
     if args.kind == "ivfpq":
@@ -1070,40 +1057,48 @@ def cmd_build_index(args) -> int:
     return 0
 
 
+def _ann_index_kind(path: str) -> tuple | None:
+    """``(kind, id_col, vec_col)`` of the ANN index at ``path``, or None
+    when it holds none.  The ``index.json`` sidecar that ``build-index``
+    writes decides; an index built by the library has none, so its
+    layout does, with the library's default column names: ``meta.json``
+    holds either an SQ8 quantizer (``vmin``) or the IVF-PQ artifacts,
+    ``centroids.json`` is IVF."""
+    sidecar = os.path.join(path, "index.json")
+    if os.path.exists(sidecar):
+        with open(sidecar) as f:
+            s = json.load(f)
+        return (s.get("kind"), s.get("id_col", "vec_id"),
+                s.get("vec_col", "embedding"))
+    meta = os.path.join(path, "meta.json")
+    if os.path.exists(meta):
+        with open(meta) as f:
+            return ("sq8" if "vmin" in json.load(f) else "ivfpq",
+                    "vec_id", "embedding")
+    if os.path.exists(os.path.join(path, "centroids.json")):
+        return "ivf", "vec_id", "embedding"
+    return None
+
+
 def cmd_probe_index(args) -> int:
     """Top-k search against a persisted ANN index built by
-    ``build-index`` — reads the ``index.json`` sidecar for the kind and
-    column names (layout fallback for hand-built indexes: ``meta.json``
-    = ivfpq, ``centroids.json`` = ivf), probes with
-    `operators/similarity.py::probe_ivf_index/probe_ivfpq_index`
+    ``build-index`` or the library — :func:`_ann_index_kind` names the
+    kind and columns — probes with
+    `operators/similarity.py::probe_ivf_index/probe_ivfpq_index/probe_sq8_index`
     (partition-pruned cell reads, exact integer ranking — bit-identical
     to the library call), and prints one JSON result set."""
     from .operators import similarity as S
     from .session import get_spark
 
-    sidecar_path = os.path.join(args.index, "index.json")
-    if os.path.exists(sidecar_path):
-        with open(sidecar_path) as f:
-            sidecar = json.load(f)
-        kind = sidecar.get("kind")
-        id_col = sidecar.get("id_col", "vec_id")
-        vec_col = sidecar.get("vec_col", "embedding")
-    elif os.path.exists(os.path.join(args.index, "meta.json")):
-        with open(os.path.join(args.index, "meta.json")) as f:
-            _m = json.load(f)
-        # both ivfpq and sq8 persist meta.json; the quantizer keys tell
-        # them apart for hand-built indexes without an index.json
-        kind = "sq8" if "vmin" in _m else "ivfpq"
-        id_col, vec_col = "vec_id", "embedding"
-    elif os.path.exists(os.path.join(args.index, "centroids.json")):
-        kind, id_col, vec_col = "ivf", "vec_id", "embedding"
-    else:
+    found = _ann_index_kind(args.index)
+    if found is None:
         print(f"no ANN index at {args.index} (index.json / meta.json / "
               "centroids.json all missing)", file=sys.stderr)
         return 2
+    kind, id_col, vec_col = found
     if kind not in ("ivf", "ivfpq", "sq8"):
-        print(f"unknown index kind {kind!r} in {sidecar_path}",
-              file=sys.stderr)
+        print(f"unknown index kind {kind!r} in "
+              f"{os.path.join(args.index, 'index.json')}", file=sys.stderr)
         return 2
 
     spark = get_spark("slicedb-probe-index")

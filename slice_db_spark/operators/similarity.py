@@ -735,12 +735,7 @@ def pq_adc_topk(
         .groupBy(query_id_col, id_col)
         .agg(F.sum("__d").alias("adist"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.asc("adist"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "adist", F.col("rank").cast("bigint").alias("rank"))
-    )
+    return _topk_rank(scored, "adist", False, k, id_col, query_id_col)
 
 
 # --------------------------------------------------- scalar quantization
@@ -900,12 +895,11 @@ def _sq8_rank(
 ) -> DataFrame:
     """Shared SQ8 scoring: broadcast-hash-join the ADC table onto the
     (id, d, code) rows, partially-aggregating sum keyed by (q, id),
-    deterministic id tie-break — the in-memory chain, the persisted
-    probe, and (with ``join_keys`` carrying the query id, r11) the
-    IVF-scoped composite all run this one plan, which is the
-    bit-parity / tie-break contract in a single place.  The rank tail
-    is exposed as :func:`_topk_rank` for chains that score by another
-    column (the refined exact-dot re-rank)."""
+    deterministic id tie-break.  Its users are :func:`sq8_adc_topk`
+    (and through it the :func:`sq8_refined_topk` shortlist),
+    :func:`probe_sq8_index` and, with ``join_keys`` carrying the query
+    id, :func:`ivfsq8_topk` — one plan, so the bit-parity / tie-break
+    contract lives in a single place."""
     scored = (
         codes.withColumn("code", F.col("code").cast("bigint"))
         .join(F.broadcast(dt), on=list(join_keys))
@@ -919,8 +913,12 @@ def _topk_rank(
     scored: DataFrame, score_col: str, descending: bool, k: int,
     id_col: str, query_id_col: str,
 ) -> DataFrame:
-    """The ONE rank tail every SQ8-family chain shares: window by
-    query, order by the score (id tie-break), keep k, cast rank."""
+    """The ONE rank tail of the integer ANN chains: window by query,
+    order by the score (id tie-break), keep k, cast rank.  Its users
+    are :func:`_sq8_rank`, :func:`pq_adc_topk`, :func:`ivfpq_topk`,
+    :func:`_ivf_score` and :func:`_ivfpq_refined_score` (the ADC
+    k′ shortlist) and :func:`_exact_rerank`.  The cosine family ranks by
+    ``sim`` with an int rank and keeps its own tails."""
     order = F.desc(score_col) if descending else F.asc(score_col)
     w = Window.partitionBy(query_id_col).orderBy(order, F.asc(id_col))
     return (
@@ -931,6 +929,35 @@ def _topk_rank(
             F.col("rank").cast("bigint").alias("rank"),
         )
     )
+
+
+def _int_dot():
+    """Exact int64 dot product of the query ``__qe`` and row ``__e``
+    quantized vectors — the score of the IVF chains and of every exact
+    re-rank."""
+    return F.aggregate(
+        F.zip_with("__qe", "__e", lambda x, y: x * y),
+        F.lit(0).cast("long"),
+        lambda a, v: a + v,
+    )
+
+
+def _exact_rerank(
+    rows: DataFrame, shortlist: DataFrame, queries: DataFrame, k: int,
+    id_col: str, vec_col: str, query_id_col: str,
+) -> DataFrame:
+    """Refine stage of the two-stage chains: broadcast the ``|Q| × k′``
+    ``(q, id)`` shortlist into the ``(id, __e)`` rows (a semi-join-pruned
+    vector fetch) and rank by the exact integer dot, descending."""
+    qvec = queries.select(
+        F.col(query_id_col), quantize_expr(vec_col).alias("__qe")
+    )
+    rr = (
+        rows.join(F.broadcast(shortlist), id_col)
+        .join(F.broadcast(qvec), query_id_col)
+        .select(query_id_col, id_col, _int_dot().alias("dot"))
+    )
+    return _topk_rank(rr, "dot", True, k, id_col, query_id_col)
 
 
 def sq8_refined_topk(
@@ -970,20 +997,9 @@ def sq8_refined_topk(
         if base is not None
         else corpus.select(F.col(id_col), quantize_expr(vec_col).alias("__e"))
     )
-    qvec = queries.select(
-        F.col(query_id_col), quantize_expr(vec_col).alias("__qe")
+    return _exact_rerank(
+        corpus_q, shortlist, queries, k, id_col, vec_col, query_id_col
     )
-    dot = F.aggregate(
-        F.zip_with("__qe", "__e", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, v: a + v,
-    )
-    rr = (
-        corpus_q.join(F.broadcast(shortlist), id_col)
-        .join(F.broadcast(qvec), query_id_col)
-        .select(query_id_col, id_col, dot.alias("dot"))
-    )
-    return _topk_rank(rr, "dot", True, k, id_col, query_id_col)
 
 
 def ivfsq8_topk(
@@ -1019,22 +1035,9 @@ def ivfsq8_topk(
         F.col(id_col), F.col("__cell"),
         F.posexplode(_sq8_codes_array(vmin, span)).alias("d", "code"),
     )
-    dists = _cell_l2_vec(centroids)
-    q = (
-        queries.select(
-            F.col(query_id_col), quantize_expr(vec_col).alias("__qe")
-        )
-        .withColumn("__d", dists(F.col("__qe")))
-        .select(query_id_col, F.posexplode("__d").alias("__i", "__dist"))
-    )
-    wp = Window.partitionBy(query_id_col).orderBy(
-        F.asc("__dist"), F.asc("__i")
-    )
-    probes = (
-        q.withColumn("__pr", F.row_number().over(wp))
-        .where(F.col("__pr") <= nprobe)
-        .select(query_id_col, (F.col("__i") + 1).alias("__cell"))
-    )
+    probes = _probe_cells(
+        queries, centroids, nprobe, query_id_col, vec_col
+    ).select(query_id_col, "__cell")
     dt = _sq8_dtable(queries, vmin, span, query_id_col, vec_col)
     candidates = codes.join(F.broadcast(probes), "__cell")
     return _sq8_rank(
@@ -1208,6 +1211,28 @@ def _assign_cells_int(corpus_q: DataFrame, centroids: list[list[int]]) -> DataFr
     )
 
 
+def _probe_cells(
+    queries: DataFrame, centroids: list[list[int]], nprobe: int,
+    query_id_col: str, vec_col: str,
+) -> DataFrame:
+    """Each query's ``nprobe`` nearest cells as ``(q, __qe, __cell)``:
+    integer squared-L2 to every centroid, ranked with a cell-index
+    tie-break, 1-based ``__cell`` like :func:`_assign_cells_int`.  The
+    one cell probe of every IVF chain and persisted-index probe."""
+    dists = _cell_l2_vec(centroids)
+    q = (
+        queries.select(F.col(query_id_col), quantize_expr(vec_col).alias("__qe"))
+        .withColumn("__d", dists(F.col("__qe")))
+        .select(query_id_col, "__qe", F.posexplode("__d").alias("__i", "__dist"))
+    )
+    w = Window.partitionBy(query_id_col).orderBy(F.asc("__dist"), F.asc("__i"))
+    return (
+        q.withColumn("__pr", F.row_number().over(w))
+        .where(F.col("__pr") <= nprobe)
+        .select(query_id_col, "__qe", (F.col("__i") + 1).alias("__cell"))
+    )
+
+
 def ivf_centroids_kmeans(
     corpus: DataFrame,
     n_cells: int,
@@ -1299,31 +1324,26 @@ def ivf_topk_kmeans(
     ``(id, __e)`` shared with the trainer."""
     if base is None:
         base = corpus.select(F.col(id_col), quantize_expr(vec_col).alias("__e"))
-    c = _assign_cells_int(base, centroids)
-    dists = _cell_l2_vec(centroids)
-    q = (
-        queries.select(F.col(query_id_col), quantize_expr(vec_col).alias("__qe"))
-        .withColumn("__d", dists(F.col("__qe")))
-        .select(query_id_col, "__qe", F.posexplode("__d").alias("__i", "__dist"))
+    return _ivf_score(
+        _assign_cells_int(base, centroids), queries, centroids, k, nprobe,
+        id_col, vec_col, query_id_col,
     )
-    w_probe = Window.partitionBy(query_id_col).orderBy(F.asc("__dist"), F.asc("__i"))
-    probes = (
-        q.withColumn("__pr", F.row_number().over(w_probe))
-        .where(F.col("__pr") <= nprobe)
-        .select(query_id_col, "__qe", (F.col("__i") + 1).alias("__cell"))
+
+
+def _ivf_score(
+    rows: DataFrame, queries: DataFrame, centroids: list[list[int]],
+    k: int, nprobe: int, id_col: str, vec_col: str, query_id_col: str,
+) -> DataFrame:
+    """The IVF scorer over ``(id, __e, __cell)`` index rows: probe the
+    ``nprobe`` nearest cells, equi-join on the cell id (a persisted
+    ``__cell``-partitioned read prunes the unprobed partitions), rank by
+    exact integer dot.  :func:`ivf_topk_kmeans` feeds rows assigned in
+    memory, :func:`probe_ivf_index` the persisted cells."""
+    probes = _probe_cells(queries, centroids, nprobe, query_id_col, vec_col)
+    scored = probes.join(rows, "__cell").select(
+        query_id_col, id_col, _int_dot().alias("dot")
     )
-    dot_q = F.aggregate(
-        F.zip_with("__qe", "__e", lambda x, y: x * y), F.lit(0).cast("long"), lambda a, v: a + v
-    )
-    scored = probes.join(c, "__cell").select(
-        query_id_col, id_col, dot_q.alias("dot")
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("dot"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "dot", F.col("rank").cast("bigint").alias("rank"))
-    )
+    return _topk_rank(scored, "dot", True, k, id_col, query_id_col)
 
 
 def ivfpq_topk(
@@ -1385,18 +1405,9 @@ def ivfpq_topk(
         F.col("m").cast("bigint").alias("m"),
         F.col("code").cast("bigint").alias("code"),
     )
-    dists = _cell_l2_vec(centroids)
-    q = (
-        queries.select(F.col(query_id_col), quantize_expr(vec_col).alias("__qe"))
-        .withColumn("__d", dists(F.col("__qe")))
-        .select(query_id_col, F.posexplode("__d").alias("__i", "__dist"))
-    )
-    w_probe = Window.partitionBy(query_id_col).orderBy(F.asc("__dist"), F.asc("__i"))
-    probes = (
-        q.withColumn("__pr", F.row_number().over(w_probe))
-        .where(F.col("__pr") <= nprobe)
-        .select(query_id_col, (F.col("__i") + 1).alias("__cell"))
-    )
+    probes = _probe_cells(
+        queries, centroids, nprobe, query_id_col, vec_col
+    ).select(query_id_col, "__cell")
     dt = _adc_dtable(
         queries, codebook, m_subspaces, query_id_col, vec_col,
         perm=perm, signs=signs,
@@ -1407,12 +1418,7 @@ def ivfpq_topk(
         .groupBy(query_id_col, id_col)
         .agg(F.sum("__d").alias("adist"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.asc("adist"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "adist", F.col("rank").cast("bigint").alias("rank"))
-    )
+    return _topk_rank(scored, "adist", False, k, id_col, query_id_col)
 
 
 def _centroid_lookup_expr(centroids: list[list[int]]):
@@ -1868,50 +1874,51 @@ def ivfpq_refined_topk(
     ``full=True``, RAW residuals) — both the encode chain and the
     exact re-rank read it instead of re-scanning and re-assigning the
     corpus, so one materialization serves the caller's whole chain."""
-    if assigned is not None:
-        corpus_q = assigned.select(F.col(id_col), "__e")
-        res = assigned
-    else:
-        corpus_q = corpus.select(
-            F.col(id_col), quantize_expr(vec_col).alias("__e")
-        )
-        cells = _assign_cells_int(corpus_q, centroids)
-        res = cells.withColumn(
-            "__r",
-            F.zip_with(
-                F.col("__e"), _centroid_lookup_expr(centroids), lambda a, b: a - b
-            ),
-        )
-    if perm is not None:
-        # OPQ: encode/ADC operate in the rotated space; the exact
-        # re-rank below stays on raw vectors (rotation preserves L2)
-        res = res.withColumn("__r", _rotate_expr("__r", perm, signs))
-    codes_of = _residual_codes_vec(codebooks)
-    codes = res.select(
-        F.col(id_col),
-        F.col("__cell"),
-        F.posexplode(codes_of(F.col("__r"))).alias("m", "code"),
-    ).select(
-        id_col,
-        "__cell",
-        F.col("m").cast("bigint").alias("m"),
-        F.col("code").cast("bigint").alias("code"),
+    res = (
+        assigned
+        if assigned is not None
+        else _residuals_frame(corpus, centroids, id_col, vec_col, full=True)
+    )
+    return _ivfpq_refined_score(
+        _ivfpq_rows(res, codebooks, perm, signs, id_col), queries, centroids,
+        codebooks, k, k_prime, nprobe, id_col, vec_col, query_id_col,
+        perm=perm, signs=signs,
     )
 
-    dists = _cell_l2_vec(centroids)
-    q = (
-        queries.select(F.col(query_id_col), quantize_expr(vec_col).alias("__qe"))
-        .withColumn("__d", dists(F.col("__qe")))
-        .select(query_id_col, "__qe", F.posexplode("__d").alias("__i", "__dist"))
+
+def _ivfpq_rows(
+    res: DataFrame, codebooks: list[list[list[int]]],
+    perm: list[int] | None, signs: list[int] | None, id_col: str,
+) -> DataFrame:
+    """Refined IVF-PQ index rows ``(id, __e, __cell, __codes)`` from a
+    full ``(id, __e, __cell, __r)`` residual frame: the (OPQ-rotated)
+    residual encoded against the per-subspace codebooks.  The in-memory
+    chain scores these rows directly; :func:`build_ivfpq_index` and
+    :func:`append_ivfpq_index` write them to ``cells/``."""
+    if perm is not None:
+        # OPQ: encode/ADC operate in the rotated space; the exact
+        # re-rank stays on raw vectors (rotation preserves L2)
+        res = res.withColumn("__r", _rotate_expr("__r", perm, signs))
+    codes_of = _residual_codes_vec(codebooks)
+    return res.select(
+        id_col, "__e", "__cell", codes_of(F.col("__r")).alias("__codes")
     )
-    w_probe = Window.partitionBy(query_id_col).orderBy(
-        F.asc("__dist"), F.asc("__i")
-    )
-    probes = (
-        q.withColumn("__pr", F.row_number().over(w_probe))
-        .where(F.col("__pr") <= nprobe)
-        .select(query_id_col, "__qe", (F.col("__i") + 1).alias("__cell"))
-    )
+
+
+def _ivfpq_refined_score(
+    rows: DataFrame, queries: DataFrame, centroids: list[list[int]],
+    codebooks: list[list[list[int]]], k: int, k_prime: int, nprobe: int,
+    id_col: str, vec_col: str, query_id_col: str,
+    perm: list[int] | None = None, signs: list[int] | None = None,
+) -> DataFrame:
+    """The refined IVF-PQ scorer over ``(id, __e, __cell, __codes)``
+    index rows: probe the ``nprobe`` nearest cells, build each query's
+    ADC table per probed cell from its (rotated) residual there, sum the
+    stored codes' table entries, keep the ``k_prime`` ADC shortlist and
+    re-rank it by exact integer dot against the rows' ``__e``.
+    :func:`ivfpq_refined_topk` feeds rows encoded in memory,
+    :func:`probe_ivfpq_index` the persisted cells."""
+    probes = _probe_cells(queries, centroids, nprobe, query_id_col, vec_col)
     qres = probes.withColumn(
         "__qr",
         F.zip_with(
@@ -1941,6 +1948,18 @@ def ivfpq_refined_topk(
             F.col("__d").cast("bigint").alias("__d"),
         )
     )
+    # outer: over a column, a plain posexplode makes Catalyst infer a
+    # size(__codes) > 0 filter and push it below the projection that
+    # encodes __codes in memory, which then runs the encoder twice.
+    # Every row holds m codes, so the outer form emits the same rows.
+    codes = rows.select(
+        id_col, "__cell", F.posexplode_outer("__codes").alias("m", "code"),
+    ).select(
+        id_col,
+        "__cell",
+        F.col("m").cast("bigint").alias("m"),
+        F.col("code").cast("bigint").alias("code"),
+    )
     scored = (
         codes.join(
             F.broadcast(probes.select(query_id_col, "__cell")), "__cell"
@@ -1949,38 +1968,12 @@ def ivfpq_refined_topk(
         .groupBy(query_id_col, id_col)
         .agg(F.sum("__d").alias("adist"))
     )
-    w_adc = Window.partitionBy(query_id_col).orderBy(
-        F.asc("adist"), F.asc(id_col)
-    )
-    shortlist = (
-        scored.withColumn("__rk", F.row_number().over(w_adc))
-        .where(F.col("__rk") <= k_prime)
-        .select(query_id_col, id_col)
-    )
-    # exact re-rank: broadcast the |Q| x k_prime shortlist into the
-    # corpus scan (semi-join-pruned vector fetch), one exact int dot per
-    # candidate
-    qvec = queries.select(
-        F.col(query_id_col), quantize_expr(vec_col).alias("__qe")
-    )
-    dot = F.aggregate(
-        F.zip_with("__qe", "__e", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, v: a + v,
-    )
-    rr = (
-        corpus_q.join(F.broadcast(shortlist), id_col)
-        .join(F.broadcast(qvec), query_id_col)
-        .select(query_id_col, id_col, dot.alias("dot"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("dot"), F.asc(id_col))
-    return (
-        rr.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            query_id_col, id_col, "dot",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
+    shortlist = _topk_rank(
+        scored, "adist", False, k_prime, id_col, query_id_col
+    ).select(query_id_col, id_col)
+    return _exact_rerank(
+        rows.select(id_col, "__e"), shortlist, queries, k,
+        id_col, vec_col, query_id_col,
     )
 
 
@@ -2289,36 +2282,18 @@ def probe_ivf_index(
     from the (tiny) JSON, probe their ``nprobe`` nearest cells via an
     equi-join against the cell-partitioned inverted lists, and rank
     candidates by exact integer dot product — identical results to
-    :func:`ivf_topk_kmeans` over the same centroids, but the corpus side
-    is the pre-assigned index (no re-quantization, no re-assignment, and
-    the broadcast cell join prunes unprobed partitions)."""
+    :func:`ivf_topk_kmeans` over the same centroids, because both run
+    :func:`_ivf_score`; only the rows differ: here the pre-assigned
+    index (no re-quantization, no re-assignment, and the broadcast cell
+    join prunes unprobed partitions)."""
     import json
     import os
 
     with open(os.path.join(path, "centroids.json")) as f:
         cents = json.load(f)
-    c = spark.read.parquet(os.path.join(path, "cells"))
-    dists = _cell_l2_vec(cents)
-    q = (
-        queries.select(F.col(query_id_col), quantize_expr(vec_col).alias("__qe"))
-        .withColumn("__d", dists(F.col("__qe")))
-        .select(query_id_col, "__qe", F.posexplode("__d").alias("__i", "__dist"))
-    )
-    w_probe = Window.partitionBy(query_id_col).orderBy(F.asc("__dist"), F.asc("__i"))
-    probes = (
-        q.withColumn("__pr", F.row_number().over(w_probe))
-        .where(F.col("__pr") <= nprobe)
-        .select(query_id_col, "__qe", (F.col("__i") + 1).alias("__cell"))
-    )
-    dot_q = F.aggregate(
-        F.zip_with("__qe", "__e", lambda x, y: x * y), F.lit(0).cast("long"), lambda a, v: a + v
-    )
-    scored = probes.join(c, "__cell").select(query_id_col, id_col, dot_q.alias("dot"))
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("dot"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "dot", F.col("rank").cast("bigint").alias("rank"))
+    return _ivf_score(
+        spark.read.parquet(os.path.join(path, "cells")), queries, cents, k,
+        nprobe, id_col, vec_col, query_id_col,
     )
 
 
@@ -2377,7 +2352,6 @@ def build_ivfpq_index(
                 id_col=id_col, vec_col=vec_col, perm=perm, signs=signs,
                 residuals=res,
             )
-            codes_of = _residual_codes_vec(cbs)
             # crash-safe REBUILD (r10, like build_ivf_index): staging +
             # swap, so the standing index survives a mid-build crash
             path = os.path.normpath(path)
@@ -2385,11 +2359,9 @@ def build_ivfpq_index(
             if os.path.isdir(staging):
                 shutil.rmtree(staging)
             os.makedirs(staging)
-            res.withColumn("__r", _rotate_expr("__r", perm, signs)).select(
-                id_col, "__e", "__cell", codes_of(F.col("__r")).alias("__codes")
-            ).write.mode("overwrite").partitionBy("__cell").parquet(
-                os.path.join(staging, "cells")
-            )
+            _ivfpq_rows(res, cbs, perm, signs, id_col).write.mode(
+                "overwrite"
+            ).partitionBy("__cell").parquet(os.path.join(staging, "cells"))
         finally:
             res.unpersist()
     finally:
@@ -2423,8 +2395,8 @@ def probe_ivfpq_index(
 ) -> DataFrame:
     """Refined OPQ-IVFPQ search against a persisted index — IDENTICAL
     ranking to :func:`ivfpq_refined_topk` with the index's rotation and
-    codebooks (the parity contract every persisted probe here honors),
-    but the corpus side is the pre-encoded index: probes rank centroids
+    codebooks, because both run :func:`_ivfpq_refined_score`; only the
+    rows differ: here the pre-encoded index.  Probes rank centroids
     from the (tiny) meta, the broadcast cell join prunes unprobed
     ``__cell`` partitions, the ADC sums stored codes against the
     query's per-cell rotated-residual tables, and the top-k′ shortlist
@@ -2435,95 +2407,10 @@ def probe_ivfpq_index(
 
     with open(os.path.join(path, "meta.json")) as f:
         meta = json.load(f)
-    cents = meta["centroids"]
-    perm, signs = meta["perm"], meta["signs"]
-    cbs = meta["codebooks"]
-
-    c = spark.read.parquet(os.path.join(path, "cells"))
-    dists = _cell_l2_vec(cents)
-    q = (
-        queries.select(F.col(query_id_col), quantize_expr(vec_col).alias("__qe"))
-        .withColumn("__d", dists(F.col("__qe")))
-        .select(query_id_col, "__qe", F.posexplode("__d").alias("__i", "__dist"))
-    )
-    w_probe = Window.partitionBy(query_id_col).orderBy(
-        F.asc("__dist"), F.asc("__i")
-    )
-    probes = (
-        q.withColumn("__pr", F.row_number().over(w_probe))
-        .where(F.col("__pr") <= nprobe)
-        .select(query_id_col, "__qe", (F.col("__i") + 1).alias("__cell"))
-    )
-    qres = probes.withColumn(
-        "__qr",
-        F.zip_with(
-            F.col("__qe"), _centroid_lookup_expr(cents), lambda a, b: a - b
-        ),
-    ).withColumn("__qr", _rotate_expr("__qr", perm, signs))
-    dtable_of = _residual_dtable_vec(cbs)
-    dt = (
-        qres.select(
-            query_id_col,
-            "__cell",
-            F.posexplode(dtable_of(F.col("__qr"))).alias("m", "__row"),
-        )
-        .select(
-            query_id_col, "__cell",
-            F.col("m").cast("bigint").alias("m"),
-            F.posexplode("__row").alias("__j", "__d"),
-        )
-        .select(
-            query_id_col, "__cell", "m",
-            F.col("__j").cast("bigint").alias("code"),
-            F.col("__d").cast("bigint").alias("__d"),
-        )
-    )
-    codes = c.select(
-        id_col, "__cell",
-        F.posexplode("__codes").alias("m", "code"),
-    ).select(
-        id_col, "__cell",
-        F.col("m").cast("bigint").alias("m"),
-        F.col("code").cast("bigint").alias("code"),
-    )
-    scored = (
-        codes.join(
-            F.broadcast(probes.select(query_id_col, "__cell")), "__cell"
-        )
-        .join(F.broadcast(dt), on=[query_id_col, "__cell", "m", "code"])
-        .groupBy(query_id_col, id_col)
-        .agg(F.sum("__d").alias("adist"))
-    )
-    w_adc = Window.partitionBy(query_id_col).orderBy(
-        F.asc("adist"), F.asc(id_col)
-    )
-    shortlist = (
-        scored.withColumn("__rk", F.row_number().over(w_adc))
-        .where(F.col("__rk") <= k_prime)
-        .select(query_id_col, id_col)
-    )
-    qvec = queries.select(
-        F.col(query_id_col), quantize_expr(vec_col).alias("__qe")
-    )
-    dot = F.aggregate(
-        F.zip_with("__qe", "__e", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, v: a + v,
-    )
-    rr = (
-        c.select(id_col, "__e")
-        .join(F.broadcast(shortlist), id_col)
-        .join(F.broadcast(qvec), query_id_col)
-        .select(query_id_col, id_col, dot.alias("dot"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("dot"), F.asc(id_col))
-    return (
-        rr.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            query_id_col, id_col, "dot",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
+    return _ivfpq_refined_score(
+        spark.read.parquet(os.path.join(path, "cells")), queries,
+        meta["centroids"], meta["codebooks"], k, k_prime, nprobe,
+        id_col, vec_col, query_id_col, perm=meta["perm"], signs=meta["signs"],
     )
 
 
@@ -2592,21 +2479,11 @@ def append_ivfpq_index(
 
     with open(os.path.join(path, "meta.json")) as f:
         meta = json.load(f)
-    cents = meta["centroids"]
-    perm, signs = meta["perm"], meta["signs"]
-    cbs = meta["codebooks"]
-    corpus_q = new_vectors.select(
-        F.col(id_col), quantize_expr(vec_col).alias("__e")
-    )
-    res = _assign_cells_int(corpus_q, cents).withColumn(
-        "__r",
-        F.zip_with(
-            F.col("__e"), _centroid_lookup_expr(cents), lambda a, b: a - b
+    rows = _ivfpq_rows(
+        _residuals_frame(
+            new_vectors, meta["centroids"], id_col, vec_col, full=True
         ),
-    ).withColumn("__r", _rotate_expr("__r", perm, signs))
-    codes_of = _residual_codes_vec(cbs)
-    rows = res.select(
-        id_col, "__e", "__cell", codes_of(F.col("__r")).alias("__codes")
+        meta["codebooks"], meta["perm"], meta["signs"], id_col,
     )
     cells = os.path.join(path, "cells")
     with dir_lock(cells) as lease:

@@ -9030,7 +9030,10 @@ def ann_ivfpq_opq(spark, sf_dir):
     coarse quantizer would change nothing), while the PQ encode, the
     shared codebook, and the query ADC tables all run in the learned
     rotated space.  The oracle composes the unrolled Lloyd chain with
-    the two-round rotation unroll and the flat code/table chain."""
+    the two-round rotation unroll and the flat code/table chain.  The
+    rotation comes from the `_FLAT_OPQ` memo that `ann_pq_opq` (earlier
+    in registry order) fills, so this entry's bench time excludes OPQ
+    training."""
     emb = catalog(spark, sf_dir)["embeddings"]
     corpus = emb.where("vec_id >= 5")
     q = emb.where("vec_id < 5").select(F.col("vec_id").alias("q_id"), "embedding")

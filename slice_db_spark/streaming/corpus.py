@@ -94,9 +94,9 @@ def ingest_corpus_stream(
     drop, and the remaining rows' banded signatures APPEND to the index —
     so per-batch cost stays independent of corpus size.  Signature
     parameters (k, bands, n) come from the index's own ``_lsh_meta.json``
-    sidecar when present (written on first creation), so an index built
-    with non-default parameters can never be appended to with
-    incompatible band hashes.  The signature append lands BEFORE the
+    sidecar when present (written before the first signature append),
+    so an index built with non-default parameters can never be appended
+    to with incompatible band hashes.  The signature append lands BEFORE the
     corpus append: a crash between the two leaves extra signature rows on
     replay, which is harmless (probe candidates are per-pair
     deduplicated), while the reverse order could silently lose coverage.
@@ -282,15 +282,25 @@ def ingest_corpus_stream(
         if lsh_index is not None:
             from ..operators import dedup as _dedup
 
+            from .media import _index_has_rows
+
             sp = batch.sparkSession
-            index_exists = os.path.isdir(lsh_index)
+            # a dir holding only the sidecar cannot be read as parquet
+            has_rows = _index_has_rows(lsh_index)
             # (k, bands, n) come from the index's own sidecar — appending
             # differently-parameterized band hashes would silently stop
-            # the probe from ever matching them
-            meta = _dedup.read_lsh_meta(lsh_index) if index_exists else None
+            # the probe from ever matching them.  Rows without a sidecar
+            # (a pre-sidecar index) are accepted with the defaults.
+            meta = _dedup.read_lsh_meta(lsh_index)
             lk, lb, ln = (
                 (meta["k"], meta["bands"], meta["n"]) if meta else (16, 4, 3)
             )
+            if meta is None and not has_rows:
+                # sidecar FIRST, like the span and pHash lanes: a crash
+                # between the first append and a trailing meta write
+                # would leave rows that no later batch stamps
+                os.makedirs(lsh_index, exist_ok=True)
+                _dedup.write_lsh_meta(lsh_index, lk, lb, ln)
             # the near-dedup stage consumes batch_unique several times
             # (probe shingles, rejects write, signature append, corpus
             # append) — persist once instead of re-running the parse +
@@ -309,7 +319,7 @@ def ingest_corpus_stream(
                     .select(F.col("id_b").alias("doc_id"))
                     .distinct()
                 )
-                if index_exists and target_exists:
+                if has_rows and target_exists:
                     corpus = sp.read.parquet(out_path)
                     near = near.union(
                         _dedup.probe_lsh_index(
@@ -376,8 +386,6 @@ def ingest_corpus_stream(
                     )
                     .write.mode("append").partitionBy("band").parquet(lsh_index)
                 )
-                if not index_exists:
-                    _dedup.write_lsh_meta(lsh_index, lk, lb, ln)
                 corpus_lease.check()
                 batch_unique.write.mode("append").parquet(out_path)
             finally:

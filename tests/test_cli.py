@@ -1441,6 +1441,34 @@ def test_build_probe_index_sq8_lifecycle(spark, tmp_path):
     assert not rep.get("errors")
 
 
+def test_append_and_compact_library_built_sq8_index(spark, tmp_path):
+    """An SQ8 index built by the library has no index.json: build-index
+    --append and compact --ivf-index name its kind from meta.json, the
+    rule probe-index uses, so the append encodes with the frozen
+    quantizer and the compaction keeps the codes/ layout."""
+    import random
+
+    from slice_db_spark.operators import similarity as S
+
+    rng = random.Random(7)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(20)]
+    schema = "vec_id bigint, embedding array<float>"
+    idx = str(tmp_path / "idx")
+    S.build_sq8_index(spark.createDataFrame(rows[:16], schema), idx)
+    assert not os.path.exists(os.path.join(idx, "index.json"))
+    newp = str(tmp_path / "new")
+    spark.createDataFrame(rows[16:], schema).write.parquet(newp)
+
+    rep = json.loads(run_cli("build-index", "--append", newp, idx))
+    assert (rep["kind"], rep["appended"]) == ("sq8", 4)
+    q = spark.createDataFrame([(0, rows[3][1])], "q_id bigint, embedding array<float>")
+    before = {tuple(r) for r in S.probe_sq8_index(spark, idx, q, k=3).collect()}
+    run_cli("build-index", "--append", newp, idx)  # replayed append
+    json.loads(run_cli("compact", "--ivf-index", idx))
+    assert spark.read.parquet(os.path.join(idx, "codes")).count() == 20
+    assert {tuple(r) for r in S.probe_sq8_index(spark, idx, q, k=3).collect()} == before
+
+
 def test_fsck_bare_file_corpus_not_parquet(tmp_path):
     """r11 review fix: fsck pointed at an existing but non-parquet file
     reports an error ENTRY (status=error, exit 2), never a raw

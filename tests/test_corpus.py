@@ -591,6 +591,60 @@ def test_streaming_ingest_span_dedup_wide(spark, tmp_path):
     assert texts[10] == "intro and fresh words after"
 
 
+def test_streaming_lsh_index_meta_first_survives_crash(spark, tmp_path, monkeypatch):
+    """The LSH sidecar is stamped before the first signature append, as
+    the span and pHash lanes do: a batch that dies on the sidecar write
+    leaves no rows behind, so the replay stamps it, and the corpus equals
+    a run without the fault.  Written after the append, the replay found
+    rows, never wrote the sidecar, and left the index untagged."""
+    import pytest
+
+    from slice_db_spark.operators import dedup as D
+
+    land = tmp_path / "land"
+    land.mkdir()
+    base = "the quick brown fox jumps over the lazy dog again and again %s"
+    b0 = [{"doc_id": 1, "text": base % "one", "lang": "en", "source": "a", "n_chars": 1},
+          {"doc_id": 2, "text": "completely different text about spark shuffles and joins",
+           "lang": "en", "source": "a", "n_chars": 1}]
+    b1 = [{"doc_id": 10, "text": base % "two", "lang": "en", "source": "a", "n_chars": 1},
+          {"doc_id": 11, "text": "a genuinely novel document mentioning parquet row groups",
+           "lang": "en", "source": "a", "n_chars": 1}]
+
+    def run(tag):
+        out = str(tmp_path / f"corpus_{tag}")
+        SC.ingest_corpus_stream(spark, str(land), out, str(tmp_path / f"ck_{tag}"),
+                                lsh_index=str(tmp_path / f"idx_{tag}"))
+        return out
+
+    _write_batch(land, "b0.jsonl", b0)
+    os.utime(os.path.join(land, "b0.jsonl"), (1_000_000_000,) * 2)
+    real, calls = D.write_lsh_meta, []
+
+    def fail_first(*a, **kw):
+        calls.append(a)
+        if len(calls) == 1:
+            raise OSError("crash on the sidecar write")
+        return real(*a, **kw)
+
+    monkeypatch.setattr(D, "write_lsh_meta", fail_first)
+    with pytest.raises(Exception):
+        run("fault")
+    monkeypatch.setattr(D, "write_lsh_meta", real)
+    out = run("fault")  # replay of the failed batch, same checkpoint
+    assert D.read_lsh_meta(str(tmp_path / "idx_fault")) == {"k": 16, "bands": 4, "n": 3}
+
+    _write_batch(land, "b1.jsonl", b1)
+    os.utime(os.path.join(land, "b1.jsonl"), (1_000_000_100,) * 2)
+    out = run("fault")
+    clean = run("clean")
+    ids = [
+        {r.doc_id for r in spark.read.parquet(o).select("doc_id").collect()}
+        for o in (out, clean)
+    ]
+    assert ids[0] == ids[1] == {1, 2, 11}  # 10 near-dups doc 1
+
+
 def test_streaming_span_index_meta_first_and_untagged_refusal(spark, tmp_path):
     """REVIEW r8 pins: (1) the span sidecar lands BEFORE the first gram
     append, so no crash window can leave rows whose span length / key

@@ -604,3 +604,59 @@ class Subsetter:
     assert _pool_owners(planted) == [
         "", "load_catalog", "panorama", "", "Subsetter._run_driver",
     ]
+
+
+def _callers(src: str, names: tuple[str, ...]) -> dict[str, set[str]]:
+    """For each of ``names``, the top-level functions of ``src`` that call
+    it (``F.row_number()`` and ``_cell_l2_vec(...)`` alike; a nested
+    function counts as its enclosing one)."""
+    out: dict[str, set[str]] = {n: set() for n in names}
+    for top in ast.parse(src).body:
+        if not isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        for node in ast.walk(top):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name in out:
+                    out[name].add(top.name)
+    return out
+
+
+def test_ann_probe_and_rank_tail_have_one_definition():
+    """Each integer ANN chain and persisted-index probe in
+    operators/similarity.py runs the one cell probe (``_probe_cells``)
+    and the one rank tail (``_topk_rank``); the cosine family keeps its
+    own ``sim``-ranked tails.  A hand-copied probe or tail brings back
+    the copies that only parity tests kept in step."""
+    with open(os.path.join(_PKG, "operators", "similarity.py")) as f:
+        got = _callers(f.read(), ("_cell_l2_vec", "row_number"))
+    assert got == {
+        "_cell_l2_vec": {"_assign_cells_int", "_probe_cells"},
+        "row_number": {
+            "_topk_rank", "_probe_cells",
+            "brute_force_topk", "knn_label_vote", "lsh_topk", "ivf_topk",
+        },
+    }, got
+
+
+def test_ann_lint_catches_planted_copies():
+    planted = '''
+from pyspark.sql import functions as F
+from pyspark.sql.functions import row_number
+
+def _probe_cells(q):
+    return _cell_l2_vec(q), F.row_number()
+
+def probe_ivf_index(q):
+    dists = _cell_l2_vec(q)
+    def tail():
+        return row_number()
+    return dists, tail
+
+RANK = F.row_number()
+'''
+    assert _callers(planted, ("_cell_l2_vec", "row_number")) == {
+        "_cell_l2_vec": {"_probe_cells", "probe_ivf_index"},
+        "row_number": {"_probe_cells", "probe_ivf_index"},
+    }
